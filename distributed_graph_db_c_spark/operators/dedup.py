@@ -22,10 +22,23 @@ oracle instead, tests/test_dedup_similarity.py).
 
 from __future__ import annotations
 
+from functools import cached_property, reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.text import shingles, tokens
+from .bucketing import (
+    IndexSpec,
+    count_and_distinct,
+    index_append,
+    index_attach,
+    index_build,
+    index_compact,
+    index_status,
+    index_target,
+    index_vacuum_generations,
+)
 
 
 def exact_dedup(df: DataFrame, cols: list[str], key: str) -> DataFrame:
@@ -423,7 +436,125 @@ def substring_dup_pairs(
     )
 
 
-# -- round 7: cross-snapshot incremental dedup -----------------------------
+# -- the MinHash band index: cross-snapshot incremental dedup ----------------
+#
+# A codec over operators/bucketing.py's segmented-index core (build,
+# append, compact, status, attach and vacuum live there once).  Per
+# generation and per append segment the index holds two bucketed tables:
+#
+# - ``_shingles`` (id, hs): the shingle-hash sets, bucketed on id — the
+#   verification join reads the index side co-located;
+# - ``_bands`` (id, bkey): bkey = xxhash64(band, bucket) folds the band
+#   id into the bucket hash so the candidate join needs ONE key —
+#   bucketed on bkey, the index side of every candidate join is read
+#   co-located, zero Exchange.
+#
+# The build parameters (num_perm, bands, rows, k) are recorded in the
+# generation's params sidecar: a batch signed or banded under other
+# parameters lives in a different bkey space and would silently match
+# nothing, so screens and appends refuse caller parameters that differ
+# from the recorded ones.
+
+# Appended-rows / base-rows ratio at which an append recommends a full
+# rebuild (or a compaction: signatures are per-document, so a minhash
+# index has no frozen sizing to outgrow and compaction services both arms
+# of the trigger).  The cost appends add is plan width: every published
+# segment widens each incremental read by one co-located probe join.
+MINHASH_RETRAIN_FRAC = 0.5
+
+# Segment-COUNT half of the trigger (the 1000x reflection): a year of
+# tiny nightly appends could stay under the row-fraction trigger forever
+# while growing the per-read plan to hundreds of probe joins.
+MINHASH_MAX_SEGMENTS = 16
+
+
+def _band_keys(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    return minhash_band_buckets(sig, bands, rows).select(
+        "id", F.xxhash64(F.col("band"), F.col("bucket")).alias("bkey")
+    )
+
+
+class MinhashDelta:
+    """A document batch shingled and signed ONCE under a snapshot's
+    recorded parameters, shared by every phase of a micro-batch (the
+    classify, screen and append; the within-batch pass can take ``hs``
+    and ``sig`` too).  The frames are persisted on first use and freed
+    by :meth:`release`.  ``rows`` counts INDEXABLE documents — those
+    with >= k tokens; a shorter one has no shingles, never enters the
+    index and matches nothing, exactly as in the one-shot operators."""
+
+    def __init__(
+        self, snapshot, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    ):
+        self.snapshot, self.params = snapshot, snapshot.params
+        self.docs, self.id_col, self.text_col = docs, id_col, text_col
+
+    @cached_property
+    def hs(self) -> DataFrame:
+        return shingle_hash_sets(
+            self.docs, self.params["k"], self.id_col, self.text_col
+        ).persist()
+
+    @cached_property
+    def sig(self) -> DataFrame:
+        p = self.params
+        return minhash_signatures(
+            self.docs, p["num_perm"], p["k"], self.id_col, self.text_col, hs_df=self.hs
+        ).persist()
+
+    @cached_property
+    def rows(self) -> int:
+        return self.hs.count()
+
+    @property
+    def ids(self) -> DataFrame:
+        return self.hs.select("id")
+
+    def validate(self, what: str) -> None:
+        # on the RAW batch, before shingling: shingle_hash_sets groups by
+        # id, so two rows sharing an id would silently MERGE their texts
+        # into one indexed document
+        n_input, n_ids = count_and_distinct(self.docs, self.id_col)
+        if n_ids != n_input:
+            raise ValueError(
+                f"{what}: delta batch has {n_input - n_ids} internally "
+                f"duplicated {self.id_col} value(s) — ids must be unique "
+                "(shingling would merge their texts into one indexed document)"
+            )
+
+    def tables(self) -> dict[str, DataFrame]:
+        return {
+            "_shingles": self.hs,
+            "_bands": _band_keys(self.sig, self.params["bands"], self.params["rows"]),
+        }
+
+    def release(self) -> None:
+        for name in ("sig", "hs"):
+            if name in self.__dict__:
+                self.__dict__[name].unpersist(blocking=False)
+
+
+MINHASH_INDEX = IndexSpec(
+    "minhash",
+    (
+        ("_shingles", "id bigint, hs array<bigint>", "id"),
+        ("_bands", "id bigint, bkey bigint", "bkey"),
+    ),
+    MinhashDelta,
+)
+
+
+def _check_params(snap, what: str, num_perm: int, bands: int, rows: int, k: int) -> None:
+    got = {"num_perm": num_perm, "bands": bands, "rows": rows, "k": k}
+    if {key: int(v) for key, v in snap.params.items()} != got:
+        raise ValueError(
+            f"{what}: caller parameters {got} contradict the index's "
+            f"recorded build parameters {snap.params} — the band-bucket "
+            "keys live in a different space, so every probe join would "
+            "silently return zero candidates (or an append would publish "
+            "a segment keyed in a foreign space); pass the recorded "
+            "parameters"
+        )
 
 
 def minhash_index_build(
@@ -433,535 +564,104 @@ def minhash_index_build(
     bands: int = 16,
     rows: int = 4,
     k: int = 3,
-    n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
     hs_df: DataFrame | None = None,
     sig_df: DataFrame | None = None,
 ) -> int:
-    """Persist a MinHash dedup INDEX for a corpus snapshot, so later
-    batches dedup against it at DELTA cost (the nightly production run:
-    "which of tonight's documents already exist in the 100 TB corpus?"
-    — the streaming gate covers within-stream dedup only; this is the
-    cross-snapshot half).  Returns the published GENERATION number.
+    """Persist a MinHash dedup INDEX for a corpus snapshot as the next
+    published GENERATION (returned), so later batches dedup against it
+    at DELTA cost — the nightly production run: "which of tonight's
+    documents already exist in the 100 TB corpus?".  Build cost is the
+    corpus's one shingling pass + two bucketed writes; a rebuild writes
+    brand-new tables and never touches the generation a concurrent
+    reader resolved (see bucketing.index_build for the claim and
+    publish discipline).
 
-    Two BUCKETED tables per generation (bucketing.write_bucketed under
-    bucketing.index_gen_prefix naming — round 12 applies the IVF
-    index's generation-versioned read discipline here, closing the
-    r11 verdict's item 5 snapshot-less-rewrite reader class: a rebuild
-    writes a brand-new generation's tables and publishes one marker,
-    NEVER touching the tables a concurrent lazy reader resolved):
-
-    - ``<prefix>__gN_bands``: (id, bkey) where bkey = xxhash64(band,
-      bucket) folds the band id into the bucket hash so the candidate
-      join needs ONE key — bucketed on bkey, the index side of every
-      future candidate join is read CO-LOCATED, zero Exchange.
-    - ``<prefix>__gN_shingles``: (id, hs) the shingle-hash sets,
-      bucketed on id — the verification join reads the old side
-      co-located too.
-
-    Build cost is the corpus's one shingling pass + two bucketed
-    writes; each incremental batch then shuffles only ITSELF.  The
-    64-bit band-fold collision argument is the minhash gates' standing
-    one (~pairs^2/2^64 — nil)."""
-    from ..sinks import _hadoop_fs, claim_marker
-    from .bucketing import (
-        index_gen_prefix,
-        index_generations,
-        index_publish_generation,
-        write_bucketed,
-    )
-
-    # Two racing nightly rebuilds would both believe they own the next
-    # generation number — same atomic claim discipline as
-    # sinks.replace_table (one builder wins, the loser raises
-    # ConcurrentCommitError loudly; a crashed builder's marker names
-    # itself).  The claim spans the whole build and is released ONLY on
-    # success: a build that dies between the two write_bucketed calls
-    # leaves the marker behind, so the next builder fails loudly and
-    # the operator can clear the orphaned claim (the UNPUBLISHED
-    # generation tables are overwrite-cleaned by the rerun — no marker
-    # was ever created for them, so no reader can resolve them).
-    # Readers never check this claim when a published generation
-    # exists: published generations are immutable, so a mid-rebuild
-    # read is safe by layout (it binds the previous generation).
-    spark = docs.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"minhash_index_build({table_prefix})")
-    gens = index_generations(spark, table_prefix)
-    gen = (gens[-1] if gens else 0) + 1
-    gp = index_gen_prefix(table_prefix, gen)
-    # hs_df/sig_df: share one shingling/signing pass when the caller
-    # runs several phases over the same corpus (minhash_dedup_pairs has
-    # the full note); the caller owns a provided frame's lifecycle
+    ``hs_df``/``sig_df`` share one shingling/signing pass when the
+    caller runs several phases over the same corpus under these
+    parameters (minhash_dedup_pairs has the full note); the caller owns
+    a provided frame's lifecycle.  The 64-bit band-fold collision
+    argument is the minhash gates' standing one (~pairs^2/2^64 — nil)."""
     owned = hs_df is None
     hs = shingle_hash_sets(docs, k, id_col, text_col).persist() if owned else hs_df
+    sig = (
+        sig_df
+        if sig_df is not None
+        else minhash_signatures(docs, num_perm, k, id_col, text_col, hs_df=hs)
+    )
     try:
-        sig = (
-            sig_df
-            if sig_df is not None
-            else minhash_signatures(docs, num_perm, k, id_col, text_col, hs_df=hs)
+        return index_build(
+            docs.sparkSession,
+            MINHASH_INDEX,
+            table_prefix,
+            {"_shingles": hs, "_bands": _band_keys(sig, bands, rows)},
+            {"num_perm": num_perm, "bands": bands, "rows": rows, "k": k},
+            f"minhash_index_build({table_prefix})",
         )
-        bk = minhash_band_buckets(sig, bands, rows)
-        bkeyed = bk.select(
-            "id", F.xxhash64(F.col("band"), F.col("bucket")).alias("bkey")
-        )
-        write_bucketed(bkeyed, f"{gp}_bands", key="bkey", n_buckets=n_buckets)
-        write_bucketed(hs, f"{gp}_shingles", key="id", n_buckets=n_buckets)
     finally:
-        # the persist must not outlive the build on ANY exit path; the
-        # claim marker, by contrast, is released ONLY on success (a
-        # half-built generation must stay unpublished AND the claim
-        # must keep naming its dead builder) — see docstring
         if owned:
             hs.unpersist()
-    # record the build parameters on disk BEFORE the publish (round 14
-    # review) so readers/appends can validate theirs — see
-    # MINHASH_PARAMS_FILE
-    _record_minhash_params(spark, gp, num_perm, bands, rows, k)
-    # publish THEN release the claim: the marker create is the atomic
-    # commit point (claim_marker O_EXCL — under our build claim it
-    # cannot collide; failing here leaves the claim as the loud wedge)
-    index_publish_generation(
-        spark, table_prefix, gen, f"minhash_index_build({table_prefix})"
-    )
-    fs.delete(jpath(claim), False)
-    return gen
-
-
-def _index_claim(warehouse: str, table_prefix: str) -> str:
-    return f"{warehouse.rstrip('/')}/_{table_prefix}__index_build__"
-
-
-# On-disk record of the minhash index's BUILD PARAMETERS (round 14
-# review): the LSH index persists its sizing in {prefix}_meta because "a
-# delta bucketed under different parameters would silently miss every
-# candidate" — the identical hazard was open in this index (build with
-# non-default num_perm/bands/rows/k, read or append with defaults: the
-# bkey spaces differ and every probe join returns zero candidates, no
-# error anywhere).  The record is a JSON sidecar in the generation's
-# shingle-table directory (the _BUCKET_SPEC pattern — invisible to
-# scans, crash-atomic publish); readers and appends VALIDATE their
-# caller-supplied parameters against it and refuse loudly on mismatch.
-# Generations written before the sidecar existed keep the old
-# caller-trusting behavior (read_json_sidecar returns None).
-MINHASH_PARAMS_FILE = "_MINHASH_PARAMS"
-
-
-def _minhash_params_location(spark, gp: str) -> str:
-    from .bucketing import warehouse_location
-
-    return warehouse_location(spark, f"{gp}_shingles")
-
-
-def _record_minhash_params(
-    spark, gp: str, num_perm: int, bands: int, rows: int, k: int
-) -> None:
-    from .bucketing import write_json_sidecar
-
-    write_json_sidecar(
-        spark, _minhash_params_location(spark, gp), MINHASH_PARAMS_FILE,
-        {"num_perm": num_perm, "bands": bands, "rows": rows, "k": k},
-    )
-
-
-def _check_minhash_params(
-    spark, gp: str, who: str, num_perm: int, bands: int, rows: int, k: int
-) -> None:
-    from .bucketing import read_json_sidecar
-
-    rec = read_json_sidecar(
-        spark, _minhash_params_location(spark, gp), MINHASH_PARAMS_FILE
-    )
-    if rec is None:
-        return  # pre-sidecar generation: caller-trusting legacy behavior
-    got = {"num_perm": num_perm, "bands": bands, "rows": rows, "k": k}
-    if {key: int(v) for key, v in rec.items()} != got:
-        raise ValueError(
-            f"{who}: caller parameters {got} contradict the index's "
-            f"recorded build parameters {rec} — the band-bucket keys "
-            "live in a different space, so every probe join would "
-            "silently return zero candidates (or an append would "
-            "publish a segment keyed in a foreign space); pass the "
-            "recorded parameters"
-        )
-
-
-# Appended-rows / base-rows ratio at which an append recommends a full
-# rebuild (minhash_index_build publishes the next generation).  Unlike the
-# IVF index there is no quantizer to drift — signatures are per-document —
-# so the trigger tracks the OTHER append cost: every published segment
-# widens each incremental read's plan by one co-located probe join.
-MINHASH_RETRAIN_FRAC = 0.5
-
-# Segment-COUNT half of the trigger (the 1000x reflection): a year of
-# tiny nightly appends could stay under the row-fraction trigger forever
-# while growing the per-read plan to hundreds of probe joins and
-# shuffling the delta batch once per segment.  Crossing this count flips
-# retrain_due regardless of rows — the rebuild folds every segment back
-# into one base.
-MINHASH_MAX_SEGMENTS = 16
 
 
 def minhash_index_append(
-    new_docs: DataFrame,
+    new_docs,
     table_prefix: str,
     num_perm: int = 64,
     bands: int = 16,
     rows: int = 4,
     k: int = 3,
-    n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
     retrain_frac: float = MINHASH_RETRAIN_FRAC,
     max_segments: int = MINHASH_MAX_SEGMENTS,
     check_duplicate_ids: bool = True,
-    hs_df: DataFrame | None = None,
-    sig_df: DataFrame | None = None,
-    hs_rows: int | None = None,
 ) -> dict:
-    """INCREMENTAL minhash-index maintenance (round 12, late — the
-    banked handoff candidate e, the lifecycle counterpart of
-    :func:`ivf_append` for the text index): shingle + sign ONLY the
-    delta batch and publish it as the resolved generation's next append
-    SEGMENT — a brand-new pair of immutable bucketed tables
-    (``bucketing.index_seg_prefix`` naming) plus one atomically-created
-    segment marker.  Work is sized by the delta; the corpus is never
-    re-shingled (previously the only way to grow the index was a
-    full-corpus ``minhash_index_build`` rebuild).
+    """INCREMENTAL maintenance: shingle + sign ONLY the delta batch and
+    publish it as the newest generation's next immutable append SEGMENT
+    (bucketing.index_append).  ``new_docs`` is a document frame or a
+    :class:`MinhashDelta` an open snapshot made — the streaming
+    handler's one shingling pass per micro-batch; an append through a
+    snapshot refuses if a newer generation was published since.
 
-    Semantics: a minhash signature depends only on its own document's
-    text, so base ∪ segments indexes EXACTLY what one build over the
-    union would index (pytest-pinned: append vs union-build, identical
-    incremental pairs).  That per-document independence is also why
-    appends here get the STRONGER isolation the IVF append cannot
-    offer: nothing needs to mutate in place, so a published segment is
-    immutable, readers resolve (generation, published segments) once
-    (see :func:`incremental_dedup_pairs`), and an in-flight append is
-    invisible until its marker lands — snapshot isolation by layout,
-    no append-quiescence caveat.
+    A signature depends only on its own document, so base ∪ segments
+    indexes EXACTLY what one build over the union would (pytest-pinned),
+    and an in-flight append is invisible until its marker lands.  Every
+    segment adds one probe join to each later read, so the returned
+    audit carries the two-sided REBUILD TRIGGER: appended_rows /
+    base_rows >= ``retrain_frac`` OR n_segments >= ``max_segments``
+    flips ``retrain_due`` (service it with :func:`minhash_index_compact`
+    or a rebuild).  ``batch_rows`` and the counts it accumulates into
+    are INDEXABLE documents (see MinhashDelta).
 
-    What appends cannot do is shrink the per-read plan: every segment
-    adds one co-located probe join to each future incremental read.
-    That is the REBUILD TRIGGER, recorded in the returned audit, and it
-    is TWO-SIDED: appended_rows / base_rows >= ``retrain_frac`` OR
-    n_segments >= ``max_segments`` flips ``retrain_due`` (the count
-    side is the 1000x guard — a year of tiny nightly appends stays
-    under any row fraction while growing the per-read plan to hundreds
-    of probe joins) — the maintenance step is a full
-    :func:`minhash_index_build` over the union corpus, which publishes
-    the next GENERATION (atomic marker, concurrent readers keep their
-    resolved generation) and resets the segment count to zero.
-    :func:`minhash_index_status` recomputes the same audit from disk in
-    a fresh session — the ledger is the layout itself, no sidecar.
-
-    Concurrency: appends take the SAME build claim as
-    ``minhash_index_build`` (builds, rebuilds and appends all
-    serialize; one loud O_EXCL winner).  Everything before the first
-    write releases the claim on failure (an untouched index must not
-    wedge); once the segment tables start writing, the claim is
-    success-only, and the segment marker create is the atomic commit
-    point — a dead appender leaves unpublished tables no reader can
-    resolve, plus the claim as the loud wedge.
-
-    Append means NEW ids (same contract and default slim semi-join
-    check as ``ivf_append``): a re-ingested id would collide with its
-    base/segment copy in every future candidate join; replacing a
-    document is a rebuild, not an append.  The delta's OWN ids are
-    checked for internal duplicates too.  Refuses on the legacy flat
-    layout (generation 0) — segments are a generation-layout feature;
-    rebuild once to adopt it.
-
-    Ledger semantics: ``batch_rows`` (and the base/appended counts it
-    accumulates into) count INDEXABLE documents — those with >= k
-    tokens; a shorter document produces no shingles, never enters the
-    shingle store, and matches nothing at any threshold, exactly as in
-    the one-shot operators."""
-    from ..sinks import _hadoop_fs, claim_marker
-    from .bucketing import (
-        index_gen_prefix,
-        index_generations,
-        index_publish_segment,
-        index_seg_prefix,
-        index_segments,
-        write_bucketed,
+    Append means NEW ids: a re-ingested id would collide with its
+    indexed copy in every future candidate join, so the delta is checked
+    against the index (``check_duplicate_ids``) and for internal
+    duplicates; replacing a document is a rebuild."""
+    what = f"minhash_index_append({table_prefix})"
+    snap, d = index_target(
+        MINHASH_INDEX, new_docs, table_prefix, id_col=id_col, text_col=text_col
     )
-
-    spark = new_docs.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"minhash_index_append({table_prefix})")
-    # PRE-MUTATION SECTION (mirrors ivf_append): failures here release
-    # the claim and re-raise — the index is untouched and valid, and
-    # "rerun the append" would fail identically forever behind a wedge.
-    owned = hs_df is None
-    hs = None
+    _check_params(snap, what, num_perm, bands, rows, k)
     try:
-        gens = index_generations(spark, table_prefix)
-        if not gens:
-            raise FileNotFoundError(
-                f"minhash_index_append({table_prefix}): no published "
-                "generation to append to — build the index first "
-                "(minhash_index_build); the legacy flat layout predates "
-                "segments and must be rebuilt once to adopt them."
-            )
-        gen = gens[-1]
-        segs = index_segments(spark, table_prefix, gen)
-        seg = (segs[-1] if segs else 0) + 1
-        gp = index_gen_prefix(table_prefix, gen)
-        parts = [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]
-        # a mismatched-parameter segment would be keyed in a foreign
-        # bkey space, silently poisoning recall — validate against the
-        # generation's recorded build parameters (round 14 review)
-        _check_minhash_params(
-            spark, gp, f"minhash_index_append({table_prefix})",
-            num_perm=num_perm, bands=bands, rows=rows, k=k,
-        )
-        # internal-duplicate check BEFORE shingling: shingle_hash_sets
-        # groups by id, so two delta rows sharing an id would silently
-        # MERGE their shingle sets into one indexed document — check the
-        # raw input (round 15: ONE fused aggregation on a slim
-        # projection, guide §1.2 — was two separate delta passes)
-        from .bucketing import count_and_distinct
-
-        n_input, n_ids = count_and_distinct(new_docs, id_col)
-        if n_ids != n_input:
-            raise ValueError(
-                f"minhash_index_append({table_prefix}): delta batch has "
-                f"{n_input - n_ids} internally duplicated {id_col} "
-                "value(s) — ids must be unique (shingling would merge "
-                "their texts into one indexed document)"
-            )
-        # hs_df/sig_df: share one shingling/signing pass when the caller
-        # runs several phases over the same batch (minhash_dedup_pairs
-        # has the full note); caller owns a provided frame's lifecycle
-        hs = (
-            shingle_hash_sets(new_docs, k, id_col, text_col).persist()
-            if owned
-            else hs_df
-        )
-        # hs_rows (round 16, guide §1.2): a caller that already counted
-        # the SAME pinned hs frame (the streaming handler's indexable
-        # guard runs hs.count() per batch) passes it and this job is
-        # skipped — identical value by construction
-        batch_rows = hs.count() if hs_rows is None else int(hs_rows)
-        if check_duplicate_ids:
-            # one slim semi-join per part against the 2-column shingle
-            # store's id column; a hit refuses BEFORE any mutation.
-            # Cross-session seam (round 14 review): a part published by
-            # another session since this one attached must auto-attach
-            # here, not die on TABLE_OR_VIEW_NOT_FOUND
-            from functools import reduce
-
-            from .bucketing import ensure_attached
-
-            for p in parts:
-                ensure_attached(
-                    spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id",
-                    INDEX_N_BUCKETS,
-                )
-            existing = reduce(
-                DataFrame.unionByName,
-                [spark.table(f"{p}_shingles").select("id") for p in parts],
-            )
-            n_dup = hs.select("id").join(existing, "id", "left_semi").count()
-            if n_dup:
-                raise ValueError(
-                    f"minhash_index_append({table_prefix}): {n_dup} delta "
-                    f"id(s) already indexed in generation {gen} — append "
-                    "means new ids; replacing documents is a rebuild "
-                    "(minhash_index_build), not an append. Pass "
-                    "check_duplicate_ids=False only if disjointness is "
-                    "guaranteed upstream."
-                )
-    except BaseException:
-        # release discipline (round 14 review): EVERY pre-mutation
-        # failure after the persist — not just the duplicate refusal —
-        # must unpersist an owned hs, or each retried append strands
-        # one cached delta's shingle sets for the session lifetime
-        if owned and hs is not None:
-            hs.unpersist()
-        fs.delete(jpath(claim), False)
-        raise
-    # MUTATION SECTION: claim is success-only from here (docstring).
-    sp = index_seg_prefix(table_prefix, gen, seg)
-    try:
-        sig = (
-            sig_df
-            if sig_df is not None
-            else minhash_signatures(new_docs, num_perm, k, id_col, text_col, hs_df=hs)
-        )
-        bk = minhash_band_buckets(sig, bands, rows)
-        bkeyed = bk.select(
-            "id", F.xxhash64(F.col("band"), F.col("bucket")).alias("bkey")
-        )
-        write_bucketed(bkeyed, f"{sp}_bands", key="bkey", n_buckets=n_buckets)
-        write_bucketed(hs, f"{sp}_shingles", key="id", n_buckets=n_buckets)
+        return index_append(snap, d, what, check_duplicate_ids, retrain_frac, max_segments)
     finally:
-        if owned:
-            hs.unpersist()
-    index_publish_segment(
-        spark, table_prefix, gen, seg, f"minhash_index_append({table_prefix})"
+        if d is not new_docs:
+            d.release()
+
+
+def minhash_index_compact(spark, table_prefix: str) -> dict:
+    """Fold the newest generation's append SEGMENTS back into one base
+    WITHOUT re-shingling (bucketing.index_compact): signatures are
+    per-document, so the compacted generation indexes bit-identically
+    what the wide one did, at the cost of one IO-bound rewrite of two
+    slim tables — and since a minhash index has no frozen sizing to
+    outgrow, compaction services BOTH arms of the rebuild trigger.  The
+    source generation stays published for pinned readers; reclaim it
+    with :func:`minhash_index_vacuum`."""
+    return index_compact(
+        spark, MINHASH_INDEX, table_prefix, f"minhash_index_compact({table_prefix})"
     )
-    fs.delete(jpath(claim), False)
-    # retrain ledger — recomputed from the (cheap, slim) shingle-store
-    # row counts so a fresh session's minhash_index_status agrees; the
-    # parts attach unconditionally here (the dup-check loop above only
-    # runs under check_duplicate_ids)
-    from .bucketing import ensure_attached
-
-    for p in parts:
-        ensure_attached(
-            spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id", INDEX_N_BUCKETS
-        )
-    # ledger counts in ONE job (round 15, guide §1.2): was one count()
-    # job per part — a union tagged by part index aggregates them all
-    from functools import reduce as _reduce
-
-    _tagged = _reduce(
-        DataFrame.unionByName,
-        [spark.table(f"{gp}_shingles").select(F.lit(0).alias("_pi"))]
-        + [
-            spark.table(
-                f"{index_seg_prefix(table_prefix, gen, s)}_shingles"
-            ).select(F.lit(int(s)).alias("_pi"))
-            for s in segs
-        ],
-    )
-    _cnt = {
-        int(r["_pi"]): int(r["c"])
-        for r in _tagged.groupBy("_pi").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    base_rows = _cnt.get(0, 0)
-    prior_rows = sum(_cnt.get(int(s), 0) for s in segs)
-    appended_rows = prior_rows + batch_rows
-    frac = appended_rows / base_rows if base_rows else float("inf")
-    n_segments = len(segs) + 1
-    return {
-        "generation": gen,
-        "segment": seg,
-        "n_segments": n_segments,
-        "batch_rows": batch_rows,
-        "base_rows": base_rows,
-        "appended_rows": appended_rows,
-        "appended_frac": frac,
-        "retrain_due": bool(frac >= retrain_frac or n_segments >= max_segments),
-    }
-
-
-def minhash_index_compact(spark, table_prefix: str, n_buckets: int = 16) -> dict:
-    """Fold a generation's published append SEGMENTS back into one base
-    WITHOUT a retrain (round 13 — the r12 verdict's item 5): publish the
-    next generation whose tables are the pure UNION of the resolved
-    generation's base + segment tables.  Signatures are PER-DOCUMENT
-    (the same independence argument that made appends exact), so the
-    compacted generation indexes bit-identically what the wide one did —
-    no shingling, no signing, no semantics change; the cost is one
-    IO-bound rewrite of the generation's two slim tables.
-
-    Why this exists: the segment-count arm of the retrain trigger
-    (``MINHASH_MAX_SEGMENTS``) guards per-read PLAN WIDTH — every
-    segment adds one co-located probe join and one delta shuffle to
-    each incremental read.  Servicing that arm previously required a
-    full ``minhash_index_build`` over the union corpus, re-paying the
-    shingle/sign compute the index exists to amortize.  Compaction
-    resets the plan width at union-rewrite cost instead; and since a
-    minhash index has NO frozen sizing parameters to outgrow (unlike
-    the LSH planes / IVF quantizer), compaction fully services BOTH
-    trigger arms — a minhash index never needs a semantic rebuild.
-
-    Commit discipline: runs under the index's build claim (serializing
-    with builds and appends), stages unpublished gen-N+1 tables, and
-    publishes with one atomic marker create.  Failure at ANY point
-    leaves the resolved generation fully intact and answering, so the
-    claim is released on every exit path (the ivf_retrain_swap
-    semantics, not the append's success-only rule — there is no
-    half-mutated state a wedge would be guarding).  The source
-    generation stays published for pinned readers; reclaim it with
-    :func:`minhash_index_vacuum`."""
-    from functools import reduce
-
-    from ..sinks import _hadoop_fs, claim_marker
-    from .bucketing import (
-        ensure_attached,
-        index_gen_prefix,
-        index_generations,
-        index_publish_generation,
-        index_seg_prefix,
-        index_segments,
-        write_bucketed,
-    )
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"minhash_index_compact({table_prefix})")
-    try:
-        gens = index_generations(spark, table_prefix)
-        if not gens:
-            raise FileNotFoundError(
-                f"minhash_index_compact({table_prefix}): no published "
-                "generation — compaction folds append segments, and the "
-                "legacy flat layout has none; build first "
-                "(minhash_index_build)."
-            )
-        gen = gens[-1]
-        segs = index_segments(spark, table_prefix, gen)
-        if not segs:
-            raise ValueError(
-                f"minhash_index_compact({table_prefix}): generation "
-                f"{gen} has no published append segments — nothing to "
-                "compact (a no-op rewrite would only churn storage)."
-            )
-        parts = [index_gen_prefix(table_prefix, gen)] + [
-            index_seg_prefix(table_prefix, gen, s) for s in segs
-        ]
-        for p in parts:
-            ensure_attached(
-                spark, f"{p}_bands", INDEX_BANDS_DDL, "bkey", INDEX_N_BUCKETS
-            )
-            ensure_attached(
-                spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id", INDEX_N_BUCKETS
-            )
-        new_gen = gen + 1
-        np_ = index_gen_prefix(table_prefix, new_gen)
-        bands = reduce(
-            DataFrame.unionByName,
-            [spark.table(f"{p}_bands").select("id", "bkey") for p in parts],
-        )
-        write_bucketed(bands, f"{np_}_bands", key="bkey", n_buckets=n_buckets)
-        shingles = reduce(
-            DataFrame.unionByName,
-            [spark.table(f"{p}_shingles").select("id", "hs") for p in parts],
-        )
-        write_bucketed(shingles, f"{np_}_shingles", key="id", n_buckets=n_buckets)
-        # carry the recorded build parameters to the new generation
-        # VERBATIM (round 14 review) — compaction changes layout, never
-        # the bkey space, so the contract travels with the fold
-        from .bucketing import read_json_sidecar, write_json_sidecar
-
-        rec = read_json_sidecar(
-            spark, _minhash_params_location(spark, parts[0]), MINHASH_PARAMS_FILE
-        )
-        if rec is not None:
-            write_json_sidecar(
-                spark, _minhash_params_location(spark, np_),
-                MINHASH_PARAMS_FILE, rec,
-            )
-        index_publish_generation(
-            spark, table_prefix, new_gen, f"minhash_index_compact({table_prefix})"
-        )
-        return {
-            "generation": new_gen,
-            "from_generation": gen,
-            "compacted_segments": segs,
-            "rows": spark.table(f"{np_}_shingles").count(),
-        }
-    finally:
-        fs.delete(jpath(claim), False)
 
 
 def minhash_index_status(
@@ -971,69 +671,15 @@ def minhash_index_status(
     max_segments: int = MINHASH_MAX_SEGMENTS,
 ) -> dict:
     """The append/rebuild maintenance ledger of a persisted minhash
-    index, recomputed FROM DISK (markers + shingle-store row counts) so
-    a restarted nightly driver needs no sidecar state: resolved
-    generation, its published segments, base/appended row counts, and
-    whether the appended fraction has crossed ``retrain_frac`` (the
-    cue to run a full ``minhash_index_build`` rebuild, which publishes
-    the next generation).  Generation 0 (legacy flat layout) reports
-    zero segments — appends refuse there."""
-    from .bucketing import (
-        index_gen_prefix,
-        index_resolve,
-        index_seg_prefix,
-        index_segments,
-    )
-
-    gen = index_resolve(spark, table_prefix)
-    segs = index_segments(spark, table_prefix, gen) if gen else []
-    gp = index_gen_prefix(table_prefix, gen)
-    # cross-session seam (round 14 review): "recomputed FROM DISK"
-    # must hold for parts other sessions published too
-    from .bucketing import ensure_attached
-
-    if gen:
-        for p in [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]:
-            ensure_attached(
-                spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id",
-                INDEX_N_BUCKETS,
-            )
-    # per-part counts in ONE job (round 15, guide §1.2 — the append
-    # ledger's tagged-union fuse applied to the status recompute)
-    from functools import reduce as _reduce
-
-    _tagged = _reduce(
-        DataFrame.unionByName,
-        [spark.table(f"{gp}_shingles").select(F.lit(0).alias("_pi"))]
-        + [
-            spark.table(
-                f"{index_seg_prefix(table_prefix, gen, s)}_shingles"
-            ).select(F.lit(int(s)).alias("_pi"))
-            for s in segs
-        ],
-    )
-    _cnt = {
-        int(r["_pi"]): int(r["c"])
-        for r in _tagged.groupBy("_pi").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    base_rows = _cnt.get(0, 0)
-    appended_rows = sum(_cnt.get(int(s), 0) for s in segs)
-    frac = appended_rows / base_rows if base_rows else float("inf")
-    return {
-        "generation": gen,
-        "segments": segs,
-        "base_rows": base_rows,
-        "appended_rows": appended_rows,
-        "appended_frac": frac,
-        "retrain_due": bool(
-            appended_rows
-            and (frac >= retrain_frac or len(segs) >= max_segments)
-        ),
-    }
+    index, recomputed FROM DISK so a restarted nightly driver needs no
+    state: newest generation, its published segments, base/appended row
+    counts, and whether the trigger (see :func:`minhash_index_append`)
+    has fired."""
+    return index_status(spark, MINHASH_INDEX, table_prefix, retrain_frac, max_segments)
 
 
 def incremental_dedup_pairs(
-    new_docs: DataFrame,
+    new_docs,
     table_prefix: str,
     threshold: float = 0.8,
     num_perm: int = 64,
@@ -1045,11 +691,11 @@ def incremental_dedup_pairs(
     materialize: bool = True,
     generation: int | None = None,
     as_of_segment: int | None = None,
-    hs_df: DataFrame | None = None,
-    sig_df: DataFrame | None = None,
 ) -> DataFrame:
     """(old_id, new_id, jaccard) pairs between a NEW batch and the
-    indexed corpus snapshot, at Jaccard >= ``threshold``.
+    indexed corpus snapshot, at Jaccard >= ``threshold``.  ``new_docs``
+    is a document frame or a :class:`MinhashDelta` an open snapshot made
+    (one shingling pass shared across a micro-batch's phases).
 
     Exactly equivalent to running :func:`minhash_dedup_pairs` over
     old ∪ new and keeping the cross pairs (pytest-pinned set equality):
@@ -1059,117 +705,32 @@ def incremental_dedup_pairs(
     over the same shingle sets.
 
     Scale shape: the batch shingles/signs itself (delta-sized), the
-    candidate join shuffles ONLY the batch's (id, bkey) rows into the
-    index's bucket layout (the index scan reports its distribution —
-    no Exchange on the corpus side), and verification joins the slim
-    candidate ids against the bucketed shingle store the same way.
-    Re-ingested identical ids are excluded (old_id != new_id).
+    candidate join shuffles ONLY the batch's (id, bkey) rows into each
+    index part's bucket layout (no Exchange on the corpus side), and
+    verification joins the slim candidate ids against the bucketed
+    shingle store the same way.  Re-ingested identical ids are excluded
+    (old_id != new_id).
 
-    The read binds to ONE resolved index generation (newest published,
-    or an explicit ``generation`` pin; see bucketing.index_resolve) —
-    published generations are immutable, so a nightly rebuild racing
-    this read cannot change what it scans (round 12; previously a
-    rebuild rewrote the tables in place under any lazy reader).  Only
-    the pre-generation FLAT layout (generation 0) still refuses to
-    read under a standing build claim: flat tables were rewritten in
-    place, so a dead mid-rewrite builder means a possibly mismatched
-    bands/shingles snapshot.
-
-    Round 12, late: the resolved generation's published APPEND SEGMENTS
-    (:func:`minhash_index_append`) are part of the snapshot — resolved
-    ONCE, alongside the generation, as the list of published segment
-    markers.  The probe joins run PER PART (base + each segment), each
-    one co-located against that part's bucketed layout with only the
-    delta-sized batch shuffling, and union; a racing append is
-    invisible (its marker lands after our resolve), so the plan is
-    snapshot-isolated against appends too — by layout, no quiescence
-    check.  ``as_of_segment`` pins the segment horizon: 0 = base only,
-    N = segments <= N (the within-generation time-travel pin, same
-    explicit-never-fallback contract as the generation pin)."""
-    from ..sinks import ConcurrentCommitError, _hadoop_fs
-    from .bucketing import index_gen_prefix, index_resolve
-
-    spark = new_docs.sparkSession
-    gen = index_resolve(spark, table_prefix, generation)
-    if gen == 0:
-        # legacy flat layout: in-place rewrites existed, claim = doubt
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        fs, jpath = _hadoop_fs(spark, warehouse)
-        claim = _index_claim(warehouse, table_prefix)
-        if fs.exists(jpath(claim)):
-            raise ConcurrentCommitError(
-                f"incremental_dedup_pairs({table_prefix}): index build "
-                f"claim {claim} is held and no published generation "
-                "exists — the flat-layout bands/shingles snapshot may be "
-                "mismatched. Wait for the build, or rerun it if its "
-                "builder is known dead."
-            )
-    from functools import reduce
-
-    from .bucketing import index_seg_prefix, index_segments
-
-    segs = index_segments(spark, table_prefix, gen) if gen else []
-    if as_of_segment is not None:
-        if as_of_segment != 0 and as_of_segment not in segs:
-            raise FileNotFoundError(
-                f"incremental_dedup_pairs({table_prefix}): segment "
-                f"{as_of_segment} of generation {gen} not published "
-                f"(have {segs or 'none'}) — segment pinning is explicit, "
-                "never a silent fallback"
-            )
-        segs = [s for s in segs if s <= as_of_segment]
-    gp = index_gen_prefix(table_prefix, gen)
-    parts = [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]
-    # caller parameters must match the generation's recorded build
-    # parameters or the probe joins return zero candidates silently
-    # (round 14 review; pre-sidecar generations skip the check)
-    _check_minhash_params(
-        spark, gp, f"incremental_dedup_pairs({table_prefix})",
-        num_perm=num_perm, bands=bands, rows=rows, k=k,
+    The read binds to ONE snapshot (bucketing.index_open): the newest
+    published generation or an explicit ``generation`` pin, and its
+    published append segments — all of them, or up to ``as_of_segment``
+    (0 = base only).  Published tables are immutable, so a rebuild,
+    append or compaction racing this read cannot change what it
+    scans."""
+    snap, d = index_target(
+        MINHASH_INDEX, new_docs, table_prefix, generation, as_of_segment,
+        id_col=id_col, text_col=text_col,
     )
-    # cross-session seam: a segment published by ANOTHER session after
-    # this one attached is in the marker listing but not this session's
-    # catalog — attach any missing part before binding the plan
-    from .bucketing import ensure_attached
-
-    for p in parts:
-        ensure_attached(spark, f"{p}_bands", INDEX_BANDS_DDL, "bkey", INDEX_N_BUCKETS)
-        ensure_attached(
-            spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id", INDEX_N_BUCKETS
-        )
-    # hs_df/sig_df: share one shingling/signing pass when the caller
-    # runs several phases over the same batch (minhash_dedup_pairs has
-    # the full note); the caller owns a provided frame's lifecycle
-    owned = hs_df is None
-    hs_new = (
-        shingle_hash_sets(new_docs, k, id_col, text_col).persist()
-        if owned
-        else hs_df
-    )
-    sig = (
-        sig_df
-        if sig_df is not None
-        else minhash_signatures(new_docs, num_perm, k, id_col, text_col, hs_df=hs_new)
-    )
-    nb = minhash_band_buckets(sig, bands, rows).select(
-        F.col("id").alias("new_id"),
-        F.xxhash64(F.col("band"), F.col("bucket")).alias("bkey"),
-    )
-    # one co-located probe join PER PART (the base tables + each append
-    # segment — a part's ids are disjoint from every other's by the
-    # append-time duplicate check, so the unions are exact): the index
-    # side of each join reads its own bucket layout with zero Exchange;
-    # only the delta-sized nb/cand sides shuffle, once per part
+    _check_params(snap, f"incremental_dedup_pairs({table_prefix})", num_perm, bands, rows, k)
+    nb = _band_keys(d.sig, bands, rows).select(F.col("id").alias("new_id"), "bkey")
+    # one co-located probe join PER PART (a part's ids are disjoint from
+    # every other's by the append-time duplicate check, so the unions
+    # are exact): only the delta-sized sides shuffle, once per part
     cand = reduce(
         DataFrame.unionByName,
         [
-            nb.join(
-                spark.table(f"{p}_bands").select(
-                    F.col("id").alias("old_id"), "bkey"
-                ),
-                "bkey",
-            )
-            for p in parts
+            nb.join(t.select(F.col("id").alias("old_id"), "bkey"), "bkey")
+            for t in snap.tables("_bands")
         ],
     )
     cand = (
@@ -1178,17 +739,12 @@ def incremental_dedup_pairs(
         .distinct()
     )
     # Persist the (delta-sized, slim) candidate set when the snapshot is
-    # WIDE: the per-part VERIFICATION union below references it once per
-    # part, and Catalyst does not dedupe repeated subtrees — uncached,
-    # each verification branch re-executes the whole candidate union,
-    # re-scanning every part's bands table (P parts -> P^2 scans; found
-    # by the r13 compaction plan pin — 12 scans at 3 parts, 289 at the
-    # 16-segment trigger ceiling).  Cached, the read is linear.  The
-    # threshold exists because the cache is NOT free: at 1-2 parts the
-    # materialization barrier costs more than AQE's exchange reuse
-    # leaves on the table (measured r13: +3.5 s on the 2-part LSH gate,
-    # zero win), so narrow snapshots keep the pipelined plan.
-    cache_cand = len(parts) > 2
+    # WIDE: the per-part verification union references it once per part
+    # and Catalyst does not dedupe repeated subtrees — uncached, P parts
+    # cost P^2 bands scans (289 at the 16-segment trigger ceiling).  At
+    # 1-2 parts the materialization barrier costs more than AQE's
+    # exchange reuse leaves on the table (measured +3.5 s, zero win).
+    cache_cand = len(snap.parts) > 2
     if cache_cand:
         cand = cand.persist()
     inter = F.size(F.array_intersect("hs_old", "hs_new"))
@@ -1197,17 +753,15 @@ def incremental_dedup_pairs(
         DataFrame.unionByName,
         [
             cand.join(
-                spark.table(f"{p}_shingles").select(
-                    F.col("id").alias("old_id"), F.col("hs").alias("hs_old")
-                ),
+                t.select(F.col("id").alias("old_id"), F.col("hs").alias("hs_old")),
                 "old_id",
             )
-            for p in parts
+            for t in snap.tables("_shingles")
         ],
     )
     result = (
         verified.join(
-            hs_new.select(F.col("id").alias("new_id"), F.col("hs").alias("hs_new")),
+            d.hs.select(F.col("id").alias("new_id"), F.col("hs").alias("hs_new")),
             "new_id",
         )
         .select(
@@ -1217,60 +771,26 @@ def incremental_dedup_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # Same release discipline as minhash_dedup_pairs: materialize the
-    # (small) surviving-pair set eagerly, then drop the cached batch
-    # shingles — a nightly loop must not accumulate one cached delta per
-    # run for the session lifetime.  ``materialize=False`` returns the
-    # lazy plan instead (the cache stays held) — for plan inspection.
+    # Materialize the (small) surviving-pair set eagerly, then release
+    # the caches this call made — a nightly loop must not accumulate one
+    # cached delta per run.  ``materialize=False`` returns the lazy plan
+    # (caches held) for plan inspection.
     if materialize:
         result = result.localCheckpoint(eager=True)
         if cache_cand:
             cand.unpersist(blocking=False)
-        if owned:
-            hs_new.unpersist(blocking=False)
+        if d is not new_docs:
+            d.release()
     return result
 
 
-# On-disk contract of the minhash index (see attach_bucketed: the
-# re-attach spec must match the writing spec exactly).
-INDEX_N_BUCKETS = 16
-INDEX_BANDS_DDL = "id bigint, bkey bigint"
-INDEX_SHINGLES_DDL = "id bigint, hs array<bigint>"
-
-
-def minhash_index_attach(
-    spark,
-    table_prefix: str,
-    n_buckets: int = INDEX_N_BUCKETS,
-    generation: int | None = None,
-) -> int:
-    """Recover a persisted minhash index's catalog entries in a FRESH
-    session (the restarted nightly driver): resolve the generation from
-    the on-disk published markers (newest, or an explicit pin — 0 is
-    the legacy flat layout and round-trips), then re-attach both
-    bucketed tables over their existing warehouse directories so
-    :func:`incremental_dedup_pairs` keeps its zero-index-shuffle plan.
-    Returns the attached generation.  No data is read or written —
-    catalog metadata only.  The generation's published append segments
-    (:func:`minhash_index_append`) are re-attached alongside the base —
-    they are part of the snapshot the reader binds to."""
-    from .bucketing import (
-        attach_bucketed,
-        index_gen_prefix,
-        index_resolve,
-        index_seg_prefix,
-        index_segments,
-    )
-
-    gen = index_resolve(spark, table_prefix, generation)
-    parts = [index_gen_prefix(table_prefix, gen)] + [
-        index_seg_prefix(table_prefix, gen, s)
-        for s in (index_segments(spark, table_prefix, gen) if gen else [])
-    ]
-    for p in parts:
-        attach_bucketed(spark, f"{p}_bands", INDEX_BANDS_DDL, "bkey", n_buckets)
-        attach_bucketed(spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id", n_buckets)
-    return gen
+def minhash_index_attach(spark, table_prefix: str, generation: int | None = None) -> int:
+    """Recover a persisted minhash index's catalog entries (base and
+    published segments) in a FRESH session — the restarted nightly
+    driver — so :func:`incremental_dedup_pairs` keeps its
+    zero-index-shuffle plan; returns the attached generation (newest, or
+    the ``generation`` pin).  Catalog metadata only."""
+    return index_attach(spark, MINHASH_INDEX, table_prefix, generation)
 
 
 def minhash_index_vacuum(spark, table_prefix: str, keep_last: int = 1) -> list[int]:
@@ -1279,8 +799,4 @@ def minhash_index_vacuum(spark, table_prefix: str, keep_last: int = 1) -> list[i
     removed generation numbers.  The ONLY destroyer of a published
     generation — a reader still pinned to one fails loudly on its next
     scan, never silently reads a different snapshot."""
-    from .bucketing import index_vacuum_generations
-
-    return index_vacuum_generations(
-        spark, table_prefix, ("_bands", "_shingles"), keep_last
-    )
+    return index_vacuum_generations(spark, table_prefix, MINHASH_INDEX.suffixes, keep_last)

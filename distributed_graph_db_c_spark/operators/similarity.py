@@ -17,6 +17,7 @@ from __future__ import annotations
 import functools
 import hashlib
 import re as _re
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -25,6 +26,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import cosine_seq, norm2_seq
+from .bucketing import (
+    IndexSpec,
+    index_append,
+    index_attach,
+    index_build,
+    index_compact,
+    index_status,
+    index_target,
+    index_vacuum_generations,
+)
 
 # Multi-table LSH: L independent tables of p hyperplanes each.  A table's
 # bucket count is 2^p; more tables -> higher recall, more planes -> finer
@@ -393,10 +404,10 @@ def cosine_lsh_pairs(
     :func:`with_lsh_buckets` output once instead of paying one
     JVM->Python->JVM round-trip per phase.  The caller GUARANTEES it
     was computed over ``embeddings`` with exactly the (n_planes,
-    n_tables) this call resolves — the streaming handler checks the
-    recorded index parameters against the batch sizing before sharing;
-    a mismatched frame would silently corrupt candidate recall, which
-    is why the default recomputes.
+    n_tables) this call resolves — the streaming handler shares its
+    delta's buckets only when the index's recorded parameters equal the
+    batch sizing; a mismatched frame would silently corrupt candidate
+    recall, which is why the default recomputes.
 
     RECALL MODEL (read this before trusting "all pairs"): precision is
     exact (every candidate is re-scored with the exact cosine), but
@@ -478,21 +489,10 @@ def cosine_lsh_pairs(
     bt = bkt.select(
         F.col(id_col).alias("id"), F.posexplode("buckets").alias("table", "bucket")
     )
-    a = bt.select(F.col("id").alias("id_a"), "table", "bucket")
-    if multiprobe > 0:
-        a = a.select(
-            "id_a",
-            "table",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(1 << b))
-                        for b in range(min(multiprobe, n_planes))
-                    ],
-                )
-            ).alias("bucket"),
-        )
+    a = _multiprobe(
+        bt.select(F.col("id").alias("id_a"), "table", "bucket"),
+        "id_a", multiprobe, n_planes,
+    )
     b = bt.select(F.col("id").alias("id_b"), "table", "bucket")
     cand = (
         a.join(b, on=["table", "bucket"])
@@ -500,16 +500,7 @@ def cosine_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    checked_norm = F.when(
-        F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"cosine_lsh_pairs: {vec_col} width != {dim} for id "),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
+    checked_norm = _checked_norm("cosine_lsh_pairs", dim, id_col, vec_col)
     wa = embeddings.select(
         F.col(id_col).alias("id_a"),
         checked_norm.alias("_na"),
@@ -577,11 +568,11 @@ def cosine_lsh_cross_pairs(
     two pick different (n_planes, n_tables) and their candidate recall
     can diverge even though both operate above the same threshold.
     Callers needing parameter parity pass the union count as
-    ``n_rows`` to lsh_index_build (the build persists its sizing basis
-    in ``{prefix}_meta.n_rows``, so the choice is reproducible either
-    way); the incremental path always reproduces the INDEX's recorded
-    parameters exactly — equivalence gates pin result equality at their
-    operating points."""
+    ``n_rows`` to lsh_index_build (the build records its sizing basis
+    in the generation's params sidecar, so the choice is reproducible
+    either way); the incremental path always reproduces the INDEX's
+    recorded parameters exactly — equivalence gates pin result equality
+    at their operating points."""
     if n_planes is None:
         if n_rows is None:
             n_rows = left.count() + right.count()
@@ -600,20 +591,7 @@ def cosine_lsh_cross_pairs(
         F.col(id_col).alias("id_a"),
         F.posexplode("buckets").alias("table", "bucket"),
     )
-    if multiprobe > 0:
-        la = la.select(
-            "id_a",
-            "table",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(1 << b))
-                        for b in range(min(multiprobe, n_planes))
-                    ],
-                )
-            ).alias("bucket"),
-        )
+    la = _multiprobe(la, "id_a", multiprobe, n_planes)
     rb = with_lsh_buckets(
         right, dim, n_planes=n_planes, n_tables=n_tables,
         id_col=id_col, vec_col=vec_col,
@@ -628,22 +606,9 @@ def cosine_lsh_cross_pairs(
     )
 
     def _unpacked(df: DataFrame, out_id: str, prefix: str, norm_alias: str):
-        checked_norm = F.when(
-            F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"cosine_lsh_cross_pairs: {vec_col} width != {dim}"
-                        " for id "
-                    ),
-                    F.col(id_col).cast("string"),
-                )
-            )
-        )
         return df.select(
             F.col(id_col).alias(out_id),
-            checked_norm.alias(norm_alias),
+            _checked_norm("cosine_lsh_cross_pairs", dim, id_col, vec_col).alias(norm_alias),
             *[F.col(vec_col)[i].alias(f"{prefix}{i}") for i in range(dim)],
         )
 
@@ -668,26 +633,162 @@ def cosine_lsh_cross_pairs(
     )
 
 
-# On-disk contract of the persisted decontamination index (the
-# attach_bucketed rule: a re-attach spec must match the writing spec).
-LSH_INDEX_N_BUCKETS = 16
-LSH_INDEX_BUCKETS_DDL = "id bigint, bkey bigint"
-LSH_INDEX_VECTORS_DDL = "id bigint, nrm double, v array<double>"
-LSH_INDEX_META_DDL = (
-    "n_planes int, n_tables int, multiprobe int, threshold double,"
-    " dim int, n_rows bigint"
+# -- the cosine-LSH decontamination index -------------------------------------
+#
+# A codec over operators/bucketing.py's segmented-index core (build,
+# append, compact, status, attach and vacuum live there once).  Per
+# generation and per append segment the index holds two bucketed tables:
+#
+# - ``_vectors`` (id, nrm, v), bucketed on id: the rescore side, the norm
+#   precomputed and the width validated at write;
+# - ``_buckets`` (id, bkey), bucketed+sorted on bkey = xxhash64(table,
+#   bucket): the candidate join's index side, read co-located (no
+#   Exchange above the bucketed scan, plan-pinned).
+#
+# The planes are md5-derived from (dim, n_planes, n_tables), so the
+# generation's params sidecar — those three integers plus the recorded
+# multiprobe, threshold and sizing basis ``n_rows`` — pins the bucketing
+# exactly; a batch bucketed under other parameters would silently miss
+# every candidate, which is why screens and appends bucket under the
+# snapshot's recorded parameters and never take them from a caller.
+
+# Appended-rows / sizing-basis ratio at which an append recommends a
+# full rebuild.  The planes are FROZEN at build and sized from the
+# recorded n_rows; appends grow bucket occupancy past that basis (more
+# candidates per bucket — cost creep, and at some point lsh_params_for
+# would have chosen more planes).  Compaction does not reset it: rows a
+# compaction folds into the base past the basis still count.
+LSH_RETRAIN_FRAC = 0.5
+
+# Segment-COUNT half of the trigger — same 1000x argument as
+# operators.dedup.MINHASH_MAX_SEGMENTS: tiny nightly appends must not
+# grow the per-read plan unboundedly under the row-fraction radar.
+LSH_MAX_SEGMENTS = 16
+
+
+def _checked_norm(who: str, dim: int, id_col: str, vec_col: str):
+    """The vector's norm, raising on any row whose width != ``dim``: the
+    unpacked scoring indexes ``vec[0..dim)``, and a shorter vector would
+    score a null cosine and its pair would vanish silently."""
+    return F.when(F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"{who}: {vec_col} width != {dim} for id "),
+                F.col(id_col).cast("string"),
+            )
+        )
+    )
+
+
+def _multiprobe(df: DataFrame, id_name: str, probe: int, n_planes: int) -> DataFrame:
+    """Widen (id, table, bucket) rows to also match the buckets one sign
+    flip away in each of the first ``probe`` planes — the standard
+    probe-side widening."""
+    if probe <= 0:
+        return df
+    flips = [F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(min(probe, n_planes))]
+    return df.select(
+        id_name, "table", F.explode(F.array(F.col("bucket"), *flips)).alias("bucket")
+    )
+
+
+def _index_tables(vectors, buckets, dim: int, id_col: str, vec_col: str, who: str) -> dict:
+    bt = buckets.select(
+        F.col(id_col).alias("id"), F.posexplode("buckets").alias("table", "bucket")
+    )
+    return {
+        "_vectors": vectors.select(
+            F.col(id_col).alias("id"),
+            _checked_norm(who, dim, id_col, vec_col).alias("nrm"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        ),
+        "_buckets": bt.select(
+            "id", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
+        ),
+    }
+
+
+class LshDelta:
+    """An embedding batch validated and bucketed ONCE under a snapshot's
+    recorded plane parameters, shared by every phase of a micro-batch
+    (the classify, screen and append; the within-batch pass can take
+    ``buckets`` when its own sizing coincides).  ``counts`` is (rows,
+    distinct ids, rows whose width != the recorded dim) from ONE
+    aggregation; ``buckets`` is persisted on first use and freed by
+    :meth:`release`."""
+
+    def __init__(
+        self, snapshot, vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+    ):
+        self.snapshot, self.params = snapshot, snapshot.params
+        self.vectors, self.id_col, self.vec_col = vectors, id_col, vec_col
+
+    @cached_property
+    def counts(self) -> tuple[int, int, int]:
+        # a NULL id collapses to one distinct row, as distinct().count()
+        # counts it; a NULL vector's NULL size lands in otherwise(0)
+        r = self.vectors.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col(self.id_col)).alias("d"),
+            F.max(F.col(self.id_col).isNull().cast("int")).alias("has_null"),
+            F.sum(
+                F.when(F.size(F.col(self.vec_col)) != int(self.params["dim"]), 1).otherwise(0)
+            ).alias("n_bad"),
+        ).head()
+        return int(r["n"]), int(r["d"]) + int(r["has_null"] or 0), int(r["n_bad"] or 0)
+
+    @property
+    def rows(self) -> int:
+        return self.counts[0]
+
+    @cached_property
+    def buckets(self) -> DataFrame:
+        p = self.params
+        return with_lsh_buckets(
+            self.vectors, int(p["dim"]), n_planes=int(p["n_planes"]),
+            n_tables=int(p["n_tables"]), id_col=self.id_col, vec_col=self.vec_col,
+        ).persist()
+
+    @property
+    def ids(self) -> DataFrame:
+        return self.vectors.select(F.col(self.id_col).alias("id"))
+
+    def validate(self, what: str) -> None:
+        n, n_ids, n_bad = self.counts
+        if n_ids != n:
+            raise ValueError(
+                f"{what}: delta batch has {n - n_ids} internally duplicated "
+                f"{self.id_col} value(s) — ids must be unique"
+            )
+        # before any write: the per-row width raise would otherwise fire
+        # mid-segment-write and wedge the success-only claim
+        if n_bad:
+            raise ValueError(
+                f"{what}: {n_bad} delta vector(s) have width != the index's "
+                f"recorded dim {self.params['dim']} — a mis-shaped vector can "
+                "never collide with the recorded plane parameters; fix the "
+                "batch upstream."
+            )
+
+    def tables(self) -> dict[str, DataFrame]:
+        return _index_tables(
+            self.vectors, self.buckets, int(self.params["dim"]), self.id_col,
+            self.vec_col, "lsh_index_append",
+        )
+
+    def release(self) -> None:
+        if "buckets" in self.__dict__:
+            self.buckets.unpersist(blocking=False)
+
+
+LSH_INDEX = IndexSpec(
+    "cosine-LSH",
+    (
+        ("_vectors", "id bigint, nrm double, v array<double>", "id"),
+        ("_buckets", "id bigint, bkey bigint", "bkey"),
+    ),
+    LshDelta,
 )
-
-
-def _lsh_index_claim(warehouse: str, table_prefix: str) -> str:
-    """Delegates to operators.dedup._index_claim: ONE claim-naming rule
-    for every warehouse index build.  Deliberate consequence: a minhash
-    index and an LSH index sharing a ``table_prefix`` contend on the
-    SAME marker — distinct indexes must use distinct prefixes (which
-    the table names already force: both suffix the same prefix)."""
-    from .dedup import _index_claim
-
-    return _index_claim(warehouse, table_prefix)
 
 
 def lsh_index_build(
@@ -698,75 +799,32 @@ def lsh_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multiprobe: int = 0,
-    n_buckets: int = LSH_INDEX_N_BUCKETS,
     n_rows: int | None = None,
     buckets_df: DataFrame | None = None,
 ) -> int:
-    """PERSIST the train side of semantic decontamination (round 10 —
-    the minhash_index_build pattern applied to embedding cross-pairs):
-    the corpus is bucketed under auto-sized md5 planes ONCE, and three
-    tables land in the warehouse under GENERATION-SUFFIXED names
-    (round 12 — bucketing.index_gen_prefix: a rebuild writes a fresh
-    generation and publishes one atomic marker, never touching the
-    tables a concurrent lazy reader resolved; returns the published
-    generation number) —
+    """PERSIST the train side of semantic decontamination (the
+    minhash_index_build pattern applied to embedding cross-pairs): the
+    corpus is bucketed under auto-sized md5 planes ONCE and lands as the
+    index's next published GENERATION (returned); each eval batch then
+    shuffles ONLY its own slim (id, bkey) rows into the index's bucket
+    layout.  The vector width is VALIDATED at write — a short vector
+    raises here, not as a silently dropped pair at query time.
 
-    - ``{prefix}_buckets`` (id, bkey), bucketed+sorted on bkey: the
-      candidate join's index side, read co-located (no Exchange above
-      the bucketed scan, plan-pinned);
-    - ``{prefix}_vectors`` (id, nrm, v), bucketed on id: the rescore
-      side, with the norm precomputed at build (and the vector width
-      VALIDATED here — a short vector raises at build, not as a
-      silently dropped pair at query time);
-    - ``{prefix}_meta`` one row of the sizing parameters.  The planes
-      matrix itself is md5-derived from (dim, n_planes, n_tables), so
-      persisting the THREE INTEGERS pins the bucketing exactly; an
-      eval batch bucketed under different parameters would silently
-      miss every candidate, which is why
-      :func:`decontaminate_incremental` reads them from meta instead
-      of trusting its caller.
-
-    Nightly contract: the build is one bounded pass over the train
-    corpus under the engine's claim marker (success-only release — a
-    dead builder leaves a loud wedge); each eval batch then shuffles
-    ONLY its own slim (id, bkey) rows into the index's bucket layout.
-
-    Sizing basis (ADVICE r10): parameters auto-size from the TRAIN
-    count by default — the corpus whose bucket occupancy the index
-    actually pays — and the basis used is PERSISTED as
-    ``{prefix}_meta.n_rows``, so any caller can reproduce the exact
-    bucketing.  The one-shot :func:`cosine_lsh_cross_pairs` sizes from
-    its left+right UNION instead; callers wanting parameter parity with
-    it pass that union count as ``n_rows`` here (the incremental query
-    path reads every parameter back from meta, so recall follows the
-    recorded basis either way)."""
-    from .bucketing import write_bucketed
-    from ..sinks import _hadoop_fs, claim_marker
-
-    from .bucketing import (
-        index_gen_prefix,
-        index_generations,
-        index_publish_generation,
-    )
-
-    spark = train.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _lsh_index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"lsh_index_build({table_prefix})")
-    gens = index_generations(spark, table_prefix)
-    gen = (gens[-1] if gens else 0) + 1
-    gp = index_gen_prefix(table_prefix, gen)
+    Sizing basis (ADVICE r10): parameters auto-size from the TRAIN count
+    by default — the corpus whose bucket occupancy the index actually
+    pays — and the basis used is recorded as ``n_rows`` in the params
+    sidecar, so any caller can reproduce the exact bucketing.  The
+    one-shot :func:`cosine_lsh_cross_pairs` sizes from its left+right
+    UNION instead; callers wanting parameter parity pass that union
+    count as ``n_rows`` here.  ``buckets_df`` shares a
+    :func:`with_lsh_buckets` pass the caller already made over ``train``
+    under exactly the parameters this sizing resolves (the streaming
+    bootstrap derives both from one lsh_params_for call)."""
     if n_rows is None:
         n_rows = train.count()
     n_planes, n_tables, probe, _pred = lsh_params_for(
         n_rows, threshold, min_multiprobe=multiprobe
     )
-    # buckets_df: the cosine_lsh_pairs sharing contract (round 16,
-    # guide §4) — caller guarantees it is with_lsh_buckets(train, dim,
-    # n_planes, n_tables) for exactly the parameters this sizing
-    # resolves (the streaming handler derives both from the same
-    # lsh_params_for call, so they match by construction)
     bkt = (
         buckets_df
         if buckets_df is not None
@@ -775,306 +833,59 @@ def lsh_index_build(
             id_col=id_col, vec_col=vec_col,
         )
     )
-    bt = bkt.select(
-        F.col(id_col).alias("id"),
-        F.posexplode("buckets").alias("table", "bucket"),
+    return index_build(
+        train.sparkSession,
+        LSH_INDEX,
+        table_prefix,
+        _index_tables(train, bkt, dim, id_col, vec_col, "lsh_index_build"),
+        {
+            "n_planes": int(n_planes), "n_tables": int(n_tables),
+            "multiprobe": int(probe), "threshold": float(threshold),
+            "dim": int(dim), "n_rows": int(n_rows),
+        },
+        f"lsh_index_build({table_prefix})",
     )
-    bkeyed = bt.select(
-        "id", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
-    )
-    write_bucketed(bkeyed, f"{gp}_buckets", key="bkey", n_buckets=n_buckets)
-    checked_norm = F.when(
-        F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"lsh_index_build: {vec_col} width != {dim} for id "),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
-    vecs = train.select(
-        F.col(id_col).alias("id"),
-        checked_norm.alias("nrm"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    write_bucketed(vecs, f"{gp}_vectors", key="id", n_buckets=n_buckets)
-    # same dead-session hygiene as write_bucketed: an orphaned managed
-    # directory with no catalog entry (in-memory catalog, file
-    # warehouse) would fail the CREATE — clear both first
-    spark.sql(f"DROP TABLE IF EXISTS {gp}_meta")
-    from urllib.parse import urlparse as _urlparse
-
-    wh = _urlparse(warehouse)
-    if wh.scheme in ("", "file"):
-        import shutil as _shutil
-
-        _shutil.rmtree(f"{wh.path}/{gp}_meta", ignore_errors=True)
-    spark.createDataFrame(
-        [(int(n_planes), int(n_tables), int(probe), float(threshold), int(dim), int(n_rows))],
-        LSH_INDEX_META_DDL,
-    ).write.mode("overwrite").saveAsTable(f"{gp}_meta")
-    # publish THEN release the claim: the marker create is the atomic
-    # commit point (under our build claim it cannot collide; failing
-    # here leaves the claim as the loud wedge)
-    index_publish_generation(
-        spark, table_prefix, gen, f"lsh_index_build({table_prefix})"
-    )
-    fs.delete(jpath(claim), False)  # success-only, see docstring
-    return gen
-
-
-# Appended-rows / sizing-basis ratio at which an append recommends a
-# full rebuild.  The plane parameters are FROZEN at build and sized from
-# the train count recorded in meta.n_rows; appends grow bucket occupancy
-# past that basis (more candidates per bucket — cost creep, and at some
-# point lsh_params_for would have chosen more planes), and every segment
-# widens the per-read plan by one co-located probe join.
-LSH_RETRAIN_FRAC = 0.5
-
-# Segment-COUNT half of the trigger — same 1000x argument as
-# operators.dedup.MINHASH_MAX_SEGMENTS: tiny nightly appends must not
-# grow the per-read plan unboundedly under the row-fraction radar.
-LSH_MAX_SEGMENTS = 16
 
 
 def lsh_index_append(
-    new_vectors: DataFrame,
+    new_vectors,
     table_prefix: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_buckets: int = LSH_INDEX_N_BUCKETS,
     retrain_frac: float = LSH_RETRAIN_FRAC,
     max_segments: int = LSH_MAX_SEGMENTS,
     check_duplicate_ids: bool = True,
-    buckets_df: DataFrame | None = None,
-    precounted: tuple[int, int, int, int] | None = None,
 ) -> dict:
-    """INCREMENTAL decontamination-index maintenance (round 12, late —
-    the minhash_index_append pattern applied to the embedding index):
-    bucket ONLY the delta batch under the index's RECORDED plane
-    parameters (read from the generation's meta, never re-sized — a
-    delta bucketed under different parameters would silently miss every
-    candidate) and publish it as the resolved generation's next append
-    SEGMENT: a brand-new pair of immutable bucketed tables plus one
-    atomically-created segment marker.  Work is sized by the delta; the
-    train corpus is never re-bucketed.
+    """INCREMENTAL maintenance: bucket ONLY the delta batch under the
+    index's RECORDED plane parameters and publish it as the newest
+    generation's next immutable append SEGMENT (bucketing.index_append).
+    ``new_vectors`` is an embedding frame or an :class:`LshDelta` an open
+    snapshot made — the streaming handler's one bucketing pass and one
+    validation aggregate per micro-batch; an append through a snapshot
+    refuses if a newer generation was published since.
 
-    Semantics: a vector's buckets depend only on itself and the frozen
-    (dim, n_planes, n_tables), so base ∪ segments indexes EXACTLY what
-    one build with the same parameters over the union would
-    (pytest-pinned).  Appends are SNAPSHOT-ISOLATED by layout, same as
-    the minhash index: readers resolve (generation, published segments)
-    once, an in-flight append is invisible until its marker lands, and
-    no quiescence caveat exists (all three persisted indexes share this
-    discipline since round 12 — the IVF adopted it last).
+    A vector's buckets depend only on itself and the frozen (dim,
+    n_planes, n_tables), so base ∪ segments indexes EXACTLY what one
+    build with the same parameters over the union would (pytest-pinned).
+    What appends cannot do is re-size the planes: the appended fraction
+    against the recorded sizing basis ``n_rows`` is the RETRAIN TRIGGER
+    — appended_rows / basis_rows >= ``retrain_frac`` OR n_segments >=
+    ``max_segments`` flips ``retrain_due``; the retrain is a full
+    :func:`lsh_index_build` over the union corpus.
 
-    What appends cannot do is re-size the planes: meta.n_rows is the
-    sizing basis the build chose parameters for, and the appended
-    fraction against that basis is the RETRAIN TRIGGER —
-    appended_rows / n_rows >= ``retrain_frac`` OR n_segments >=
-    ``max_segments`` (the 1000x guard: tiny nightly appends must not
-    grow the per-read plan unboundedly under the row-fraction radar)
-    flips ``retrain_due`` in the returned audit (and in
-    :func:`lsh_index_status`, recomputed from disk).  The retrain is a full :func:`lsh_index_build` over the
-    union corpus: it re-sizes the parameters and publishes the next
-    GENERATION (readers keep their resolved one), resetting segments.
-
-    Concurrency contract = the minhash append's: the shared build claim
-    serializes builds/rebuilds/appends; pre-mutation failures (no
-    generation, width mismatch detected at write, duplicate ids,
-    internal duplicates) release the claim — the index is untouched;
-    the segment-marker create is the atomic commit point.  Append means
-    NEW ids (re-ingest = rebuild, not append); the delta is checked
-    against base + published segments and for internal id duplicates
-    unless ``check_duplicate_ids=False``."""
-    from ..sinks import _hadoop_fs, claim_marker
-    from .bucketing import (
-        index_gen_prefix,
-        index_generations,
-        index_publish_segment,
-        index_seg_prefix,
-        index_segments,
-        write_bucketed,
+    Refusals happen before any write, claim released: internally
+    duplicated ids, vectors whose width != the recorded dim, and
+    (``check_duplicate_ids``) ids already indexed — append means NEW
+    ids; re-ingest is a rebuild."""
+    what = f"lsh_index_append({table_prefix})"
+    snap, d = index_target(
+        LSH_INDEX, new_vectors, table_prefix, id_col=id_col, vec_col=vec_col
     )
-
-    spark = new_vectors.sparkSession
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _lsh_index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"lsh_index_append({table_prefix})")
     try:
-        gens = index_generations(spark, table_prefix)
-        if not gens:
-            raise FileNotFoundError(
-                f"lsh_index_append({table_prefix}): no published "
-                "generation to append to — build the index first "
-                "(lsh_index_build); the legacy flat layout predates "
-                "segments and must be rebuilt once to adopt them."
-            )
-        gen = gens[-1]
-        gp = index_gen_prefix(table_prefix, gen)
-        # cross-session seam (round 14 review): a generation/segment
-        # published by another session since this one attached must
-        # auto-attach here, not kill the maintenance path
-        _ensure_meta_attached(spark, gp)
-        meta = spark.table(f"{gp}_meta").head()
-        n_planes, n_tables = int(meta["n_planes"]), int(meta["n_tables"])
-        dim, basis_rows = int(meta["dim"]), int(meta["n_rows"])
-        segs = index_segments(spark, table_prefix, gen)
-        seg = (segs[-1] if segs else 0) + 1
-        # count + distinct-count + width check in ONE aggregation job
-        # (round 15, guide §1.2): three separate delta passes fused —
-        # same checks, same refusal order, one scan.  The width term
-        # counts rows whose size(vec) != dim exactly as the filter-count
-        # did (a NULL vector's NULL size fails the <> and lands in
-        # otherwise(0), matching filter's NULL-drops-row semantics).
-        # ``precounted`` (round 16, guide §1.2): a caller that already
-        # ran this exact aggregation over the same pinned frame (the
-        # streaming handler's per-batch validation) passes
-        # (n_input, n_ids, n_bad, dim_counted) and the delta pass is
-        # skipped; it is trusted only when dim_counted matches the
-        # index's recorded dim — a caller that counted widths against a
-        # different dim falls back to the fused aggregation.
-        if precounted is not None and int(precounted[3]) == dim:
-            n_input, n_ids, n_bad = (int(x) for x in precounted[:3])
-        else:
-            _vrow = new_vectors.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.col(id_col)).alias("d"),
-                F.max(F.col(id_col).isNull().cast("int")).alias("has_null"),
-                F.sum(
-                    F.when(F.size(F.col(vec_col)) != dim, 1).otherwise(0)
-                ).alias("n_bad"),
-            ).head()
-            n_input = int(_vrow["n"])
-            n_ids = int(_vrow["d"]) + int(_vrow["has_null"] or 0)
-            n_bad = int(_vrow["n_bad"] or 0)
-        if n_ids != n_input:
-            raise ValueError(
-                f"lsh_index_append({table_prefix}): delta batch has "
-                f"{n_input - n_ids} internally duplicated {id_col} "
-                "value(s) — ids must be unique"
-            )
-        # width check PRE-MUTATION (fused above): the per-row
-        # checked_norm raise below would otherwise fire during the
-        # segment write and wedge the success-only claim over an
-        # untouched index — refuse cleanly here instead, claim released
-        if n_bad:
-            raise ValueError(
-                f"lsh_index_append({table_prefix}): {n_bad} delta "
-                f"vector(s) have width != the index's recorded dim "
-                f"{dim} — a mis-shaped vector can never collide with "
-                "the recorded plane parameters; fix the batch upstream."
-            )
-        if check_duplicate_ids:
-            from .bucketing import ensure_attached
-
-            parts = [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]
-            for p in parts:
-                ensure_attached(
-                    spark, f"{p}_vectors", LSH_INDEX_VECTORS_DDL, "id",
-                    LSH_INDEX_N_BUCKETS,
-                )
-            existing = functools.reduce(
-                DataFrame.unionByName,
-                [spark.table(f"{p}_vectors").select("id") for p in parts],
-            )
-            n_dup = (
-                new_vectors.select(F.col(id_col).alias("id"))
-                .join(existing, "id", "left_semi")
-                .count()
-            )
-            if n_dup:
-                raise ValueError(
-                    f"lsh_index_append({table_prefix}): {n_dup} delta "
-                    f"id(s) already indexed in generation {gen} — append "
-                    "means new ids; replacing vectors is a rebuild "
-                    "(lsh_index_build), not an append."
-                )
-    except BaseException:
-        fs.delete(jpath(claim), False)
-        raise
-    # MUTATION SECTION: claim is success-only from here.
-    sp = index_seg_prefix(table_prefix, gen, seg)
-    # buckets_df: the sharing contract (round 16, guide §4) — caller
-    # guarantees it was bucketed under the index's RECORDED
-    # (n_planes, n_tables); the streaming handler checks the recorded
-    # meta against its sizing before sharing
-    bkt = (
-        buckets_df
-        if buckets_df is not None
-        else with_lsh_buckets(
-            new_vectors, dim, n_planes=n_planes, n_tables=n_tables,
-            id_col=id_col, vec_col=vec_col,
-        )
-    )
-    bt = bkt.select(
-        F.col(id_col).alias("id"),
-        F.posexplode("buckets").alias("table", "bucket"),
-    )
-    bkeyed = bt.select(
-        "id", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
-    )
-    write_bucketed(bkeyed, f"{sp}_buckets", key="bkey", n_buckets=n_buckets)
-    checked_norm = F.when(
-        F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"lsh_index_append: {vec_col} width != {dim} for id "),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
-    vecs = new_vectors.select(
-        F.col(id_col).alias("id"),
-        checked_norm.alias("nrm"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    write_bucketed(vecs, f"{sp}_vectors", key="id", n_buckets=n_buckets)
-    index_publish_segment(
-        spark, table_prefix, gen, seg, f"lsh_index_append({table_prefix})"
-    )
-    fs.delete(jpath(claim), False)
-    # ledger counts in ONE job (round 15, guide §1.2): the per-part
-    # count() loop scheduled 2 + len(segs) jobs over slim tables; a
-    # union tagged by part index yields every count in one aggregation.
-    _tagged = functools.reduce(
-        DataFrame.unionByName,
-        [spark.table(f"{sp}_vectors").select(F.lit(-1).alias("_pi"))]
-        + [spark.table(f"{gp}_vectors").select(F.lit(0).alias("_pi"))]
-        + [
-            spark.table(
-                f"{index_seg_prefix(table_prefix, gen, s)}_vectors"
-            ).select(F.lit(int(s)).alias("_pi"))
-            for s in segs
-        ],
-    )
-    _cnt = {
-        int(r["_pi"]): int(r["c"])
-        for r in _tagged.groupBy("_pi").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    batch_rows = _cnt.get(-1, 0)
-    # same basis-excess accounting as lsh_index_status: rows a prior
-    # compaction folded into the base still count toward plane drift
-    appended_rows = (
-        batch_rows
-        + max(0, _cnt.get(0, 0) - basis_rows)
-        + sum(_cnt.get(int(s), 0) for s in segs)
-    )
-    frac = appended_rows / basis_rows if basis_rows else float("inf")
-    n_segments = len(segs) + 1
-    return {
-        "generation": gen,
-        "segment": seg,
-        "n_segments": n_segments,
-        "batch_rows": batch_rows,
-        "basis_rows": basis_rows,
-        "appended_rows": appended_rows,
-        "appended_frac": frac,
-        "retrain_due": bool(frac >= retrain_frac or n_segments >= max_segments),
-    }
+        return index_append(snap, d, what, check_duplicate_ids, retrain_frac, max_segments)
+    finally:
+        if d is not new_vectors:
+            d.release()
 
 
 def lsh_index_status(
@@ -1084,269 +895,37 @@ def lsh_index_status(
     max_segments: int = LSH_MAX_SEGMENTS,
 ) -> dict:
     """The append/rebuild maintenance ledger of a persisted
-    decontamination index, recomputed FROM DISK (markers + meta +
-    vector-store row counts) — the restarted nightly driver needs no
-    sidecar state.  ``basis_rows`` is meta.n_rows, the count the plane
-    parameters were sized for; crossing ``retrain_frac`` is the cue to
-    run a full ``lsh_index_build`` rebuild (next generation, re-sized
-    parameters)."""
-    from .bucketing import (
-        index_gen_prefix,
-        index_resolve,
-        index_seg_prefix,
-        index_segments,
-    )
-
-    gen = index_resolve(spark, table_prefix)
-    segs = index_segments(spark, table_prefix, gen) if gen else []
-    gp = index_gen_prefix(table_prefix, gen)
-    # cross-session seam (round 14 review): the ledger is documented as
-    # "recomputed FROM DISK — no sidecar state", so a generation or
-    # segment another session published must auto-attach, not die
-    from .bucketing import ensure_attached
-
-    if gen:
-        _ensure_meta_attached(spark, gp)
-        for p in [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]:
-            ensure_attached(
-                spark, f"{p}_vectors", LSH_INDEX_VECTORS_DDL, "id",
-                LSH_INDEX_N_BUCKETS,
-            )
-    basis_rows = int(spark.table(f"{gp}_meta").head()["n_rows"])
-    # appended = rows beyond the SIZING BASIS, wherever they live: a
-    # compaction (lsh_index_compact) folds segment rows into the base
-    # WITHOUT re-sizing the planes, so counting segments alone would
-    # silently reset the drift arm of the retrain trigger.  Base rows
-    # in excess of meta.n_rows are exactly the folded appends (an
-    # explicit oversized n_rows at build clamps to 0 — no drift until
-    # the corpus outgrows the recorded basis).
-    # per-part counts in ONE job (round 15, guide §1.2 — the append
-    # ledger's tagged-union fuse applied to the status recompute)
-    _tagged = functools.reduce(
-        DataFrame.unionByName,
-        [spark.table(f"{gp}_vectors").select(F.lit(0).alias("_pi"))]
-        + [
-            spark.table(
-                f"{index_seg_prefix(table_prefix, gen, s)}_vectors"
-            ).select(F.lit(int(s)).alias("_pi"))
-            for s in segs
-        ],
-    )
-    _cnt = {
-        int(r["_pi"]): int(r["c"])
-        for r in _tagged.groupBy("_pi").agg(F.count(F.lit(1)).alias("c")).collect()
-    }
-    base_rows = _cnt.get(0, 0)
-    appended_rows = max(0, base_rows - basis_rows) + sum(
-        _cnt.get(int(s), 0) for s in segs
-    )
-    frac = appended_rows / basis_rows if basis_rows else float("inf")
-    return {
-        "generation": gen,
-        "segments": segs,
-        "basis_rows": basis_rows,
-        "appended_rows": appended_rows,
-        "appended_frac": frac,
-        "retrain_due": bool(
-            appended_rows
-            and (frac >= retrain_frac or len(segs) >= max_segments)
-        ),
-    }
+    decontamination index, recomputed FROM DISK.  ``basis_rows`` is the
+    recorded ``n_rows`` the planes were sized for; ``appended_rows``
+    counts every row beyond it, wherever it lives (segments, or a base a
+    compaction widened), so crossing ``retrain_frac`` is the cue for a
+    full ``lsh_index_build`` rebuild."""
+    return index_status(spark, LSH_INDEX, table_prefix, retrain_frac, max_segments)
 
 
-def _ensure_meta_attached(spark, gp: str) -> None:
-    """Attach generation ``gp``'s plain-parquet ``_meta`` table in this
-    session's catalog if missing (round 14 review) — the cross-session
-    seam for the ONE non-bucketed index table: a generation published
-    by another session (a rebuild) is resolved from the on-disk
-    markers, but its meta read would die on TABLE_OR_VIEW_NOT_FOUND
-    without this.  Same CREATE as lsh_index_attach's meta step."""
-    from .bucketing import warehouse_location
-
-    meta = f"{gp}_meta"
-    if not spark.catalog.tableExists(meta):
-        spark.sql(
-            f"CREATE TABLE {meta} ({LSH_INDEX_META_DDL}) USING parquet "
-            f"LOCATION '{warehouse_location(spark, meta)}'"
-        )
+def lsh_index_attach(spark, table_prefix: str, generation: int | None = None) -> int:
+    """Recover a persisted decontamination index's catalog entries (base
+    and published segments) in a FRESH session — the
+    minhash_index_attach counterpart; returns the attached generation.
+    Catalog metadata only; the parameters live in the params sidecar,
+    which needs no catalog entry."""
+    return index_attach(spark, LSH_INDEX, table_prefix, generation)
 
 
-def lsh_index_attach(
-    spark,
-    table_prefix: str,
-    n_buckets: int = LSH_INDEX_N_BUCKETS,
-    generation: int | None = None,
-) -> int:
-    """Recover a persisted decontamination index's catalog entries in a
-    FRESH session (the restarted nightly driver) — the
-    minhash_index_attach counterpart: resolve the generation from the
-    on-disk published markers (newest, an explicit pin, or 0 = the
-    legacy flat layout — round-trippable), then re-attach both bucketed
-    tables over their existing warehouse directories (recovering the
-    zero-index-shuffle join property) and the plain-parquet meta table.
-    Returns the attached generation.  Catalog metadata only; no data is
-    read or written.  The specs here ARE the on-disk contract
-    (LSH_INDEX_*_DDL) — they must match the writing spec exactly or
-    bucket membership is mislabeled."""
-    from .bucketing import (
-        attach_bucketed,
-        index_gen_prefix,
-        index_resolve,
-        warehouse_location,
-    )
+def lsh_index_compact(spark, table_prefix: str) -> dict:
+    """Fold the newest generation's append SEGMENTS back into one base
+    WITHOUT re-sizing the planes (bucketing.index_compact): bucket keys
+    are per-vector functions of the frozen parameters, so the union is
+    bit-identical in content to the wide layout, and the parameters —
+    sizing basis included — carry over verbatim.
 
-    gen = index_resolve(spark, table_prefix, generation)
-    gp = index_gen_prefix(table_prefix, gen)
-    from .bucketing import index_seg_prefix, index_segments
-
-    parts = [gp] + [
-        index_seg_prefix(table_prefix, gen, s)
-        for s in (index_segments(spark, table_prefix, gen) if gen else [])
-    ]
-    for p in parts:
-        attach_bucketed(
-            spark, f"{p}_buckets", LSH_INDEX_BUCKETS_DDL, "bkey", n_buckets
-        )
-        attach_bucketed(
-            spark, f"{p}_vectors", LSH_INDEX_VECTORS_DDL, "id", n_buckets
-        )
-    meta = f"{gp}_meta"
-    # same managed-entry guard as attach_bucketed: dropping a MANAGED
-    # table purges its directory — refuse rather than destroy
-    if spark.catalog.tableExists(meta):
-        ttype = spark.catalog.getTable(meta).tableType
-        if ttype != "EXTERNAL":
-            raise ValueError(
-                f"lsh_index_attach({meta}): table exists as {ttype} in "
-                "this session's catalog — attach is only for FRESH "
-                "sessions recovering a persisted directory."
-            )
-    spark.sql(f"DROP TABLE IF EXISTS {meta}")
-    # full qualified URI, never urlparse().path — an object-store
-    # warehouse would otherwise resolve to a defaultFS path (ADVICE r10)
-    spark.sql(
-        f"CREATE TABLE {meta} ({LSH_INDEX_META_DDL}) USING parquet "
-        f"LOCATION '{warehouse_location(spark, meta)}'"
-    )
-    return gen
-
-
-def lsh_index_compact(
-    spark, table_prefix: str, n_buckets: int = LSH_INDEX_N_BUCKETS
-) -> dict:
-    """Fold a decontamination index generation's published append
-    SEGMENTS back into one base WITHOUT re-sizing the planes (round 13
-    — the minhash_index_compact pattern; see that docstring for the
-    full rationale).  Bucket keys are per-vector functions of the
-    FROZEN plane parameters, so the union of base + segment tables is
-    bit-identical in content to the wide layout — the compacted
-    generation's ``_meta`` is copied VERBATIM, preserving the recorded
-    sizing basis (``n_rows``).
-
-    The crucial difference from the minhash index: compaction here
-    services ONLY the segment-count arm of the retrain trigger (plan
-    width).  The row-fraction arm measures drift past the frozen
-    planes' sizing basis, which no union rewrite can fix — and the
-    ledger keeps reporting it after compaction because
-    ``lsh_index_status``/``lsh_index_append`` count appended rows as
-    (vector rows beyond the recorded basis), not (rows in segments).
-    A drift-due index still needs a true ``lsh_index_build`` rebuild.
-
-    Claim discipline: ivf_retrain_swap semantics — failure at any point
-    leaves the resolved generation intact and answering, so the claim
-    releases on every exit path; the source generation stays published
-    for pinned readers (reclaim with :func:`lsh_index_vacuum`)."""
-    from ..sinks import _hadoop_fs, claim_marker
-    from .bucketing import (
-        ensure_attached,
-        index_gen_prefix,
-        index_generations,
-        index_publish_generation,
-        index_seg_prefix,
-        index_segments,
-        warehouse_location,
-        write_bucketed,
-    )
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    fs, jpath = _hadoop_fs(spark, warehouse)
-    claim = _lsh_index_claim(warehouse, table_prefix)
-    claim_marker(fs, jpath, claim, f"lsh_index_compact({table_prefix})")
-    try:
-        gens = index_generations(spark, table_prefix)
-        if not gens:
-            raise FileNotFoundError(
-                f"lsh_index_compact({table_prefix}): no published "
-                "generation — compaction folds append segments, and the "
-                "legacy flat layout has none; build first "
-                "(lsh_index_build)."
-            )
-        gen = gens[-1]
-        segs = index_segments(spark, table_prefix, gen)
-        if not segs:
-            raise ValueError(
-                f"lsh_index_compact({table_prefix}): generation {gen} "
-                "has no published append segments — nothing to compact."
-            )
-        parts = [index_gen_prefix(table_prefix, gen)] + [
-            index_seg_prefix(table_prefix, gen, s) for s in segs
-        ]
-        for p in parts:
-            ensure_attached(
-                spark,
-                f"{p}_buckets",
-                LSH_INDEX_BUCKETS_DDL,
-                "bkey",
-                LSH_INDEX_N_BUCKETS,
-            )
-            ensure_attached(
-                spark,
-                f"{p}_vectors",
-                LSH_INDEX_VECTORS_DDL,
-                "id",
-                LSH_INDEX_N_BUCKETS,
-            )
-        gp = index_gen_prefix(table_prefix, gen)
-        meta_row = spark.table(f"{gp}_meta").head()
-        new_gen = gen + 1
-        np_ = index_gen_prefix(table_prefix, new_gen)
-        buckets = functools.reduce(
-            DataFrame.unionByName,
-            [spark.table(f"{p}_buckets").select("id", "bkey") for p in parts],
-        )
-        write_bucketed(buckets, f"{np_}_buckets", key="bkey", n_buckets=n_buckets)
-        vectors = functools.reduce(
-            DataFrame.unionByName,
-            [
-                spark.table(f"{p}_vectors").select("id", "nrm", "v")
-                for p in parts
-            ],
-        )
-        write_bucketed(vectors, f"{np_}_vectors", key="id", n_buckets=n_buckets)
-        # meta VERBATIM — frozen planes, frozen sizing basis (docstring)
-        spark.sql(f"DROP TABLE IF EXISTS {np_}_meta")
-        from urllib.parse import urlparse as _urlparse
-
-        wh = _urlparse(warehouse)
-        if wh.scheme in ("", "file"):
-            import shutil as _shutil
-
-            _shutil.rmtree(f"{wh.path}/{np_}_meta", ignore_errors=True)
-        spark.createDataFrame([meta_row], LSH_INDEX_META_DDL).write.mode(
-            "overwrite"
-        ).saveAsTable(f"{np_}_meta")
-        index_publish_generation(
-            spark, table_prefix, new_gen, f"lsh_index_compact({table_prefix})"
-        )
-        return {
-            "generation": new_gen,
-            "from_generation": gen,
-            "compacted_segments": segs,
-            "rows": spark.table(f"{np_}_vectors").count(),
-            "basis_rows": int(meta_row["n_rows"]),
-        }
-    finally:
-        fs.delete(jpath(claim), False)
+    Unlike the minhash index, compaction here services ONLY the
+    segment-count arm of the retrain trigger: the row-fraction arm
+    measures drift past the frozen planes' sizing basis, which no union
+    rewrite fixes, and the ledger keeps reporting it.  The source
+    generation stays published for pinned readers (reclaim with
+    :func:`lsh_index_vacuum`)."""
+    return index_compact(spark, LSH_INDEX, table_prefix, f"lsh_index_compact({table_prefix})")
 
 
 def lsh_index_vacuum(spark, table_prefix: str, keep_last: int = 1) -> list[int]:
@@ -1355,15 +934,11 @@ def lsh_index_vacuum(spark, table_prefix: str, keep_last: int = 1) -> list[int]:
     returns the removed generation numbers.  The ONLY destroyer of a
     published generation — a reader still pinned to one fails loudly on
     its next scan, never silently reads a different snapshot."""
-    from .bucketing import index_vacuum_generations
-
-    return index_vacuum_generations(
-        spark, table_prefix, ("_buckets", "_vectors", "_meta"), keep_last
-    )
+    return index_vacuum_generations(spark, table_prefix, LSH_INDEX.suffixes, keep_last)
 
 
 def decontaminate_incremental(
-    eval_batch: DataFrame,
+    eval_batch,
     table_prefix: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1371,185 +946,80 @@ def decontaminate_incremental(
     materialize: bool = True,
     generation: int | None = None,
     as_of_segment: int | None = None,
-    buckets_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b, cosine) pairs between an EVAL batch and the indexed
-    TRAIN snapshot at cosine >= the index's threshold — the nightly
-    form of :func:`cosine_lsh_cross_pairs` (exactly the
-    incremental_dedup_pairs contract, for embeddings): a vector's
-    buckets depend only on itself and the persisted plane parameters,
-    so the candidate set decomposes exactly and batch-vs-index equals
-    one-shot cross pairs whenever both operating points have total
-    recall (gates pin equality with the one-shot gate's output).
+    TRAIN snapshot at cosine >= the index's recorded threshold — the
+    nightly form of :func:`cosine_lsh_cross_pairs` (the
+    incremental_dedup_pairs contract, for embeddings).  ``eval_batch``
+    is an embedding frame or an :class:`LshDelta` an open snapshot made.
+    A vector's buckets depend only on itself and the recorded plane
+    parameters, so the candidate set decomposes exactly and
+    batch-vs-index equals one-shot cross pairs whenever both operating
+    points have total recall.
 
     Scale shape: the batch buckets itself (delta-sized), the candidate
-    join shuffles ONLY the batch's (id_a, bkey) rows into the index's
-    bucket layout (no Exchange above the index's bucketed scan —
-    plan-pinned), and rescoring joins the slim candidate ids against
-    the id-bucketed vectors table the same way.  Probe widening
-    defaults to the INDEX's recorded multiprobe (reading it from meta,
-    not trusting the caller — mismatched widening silently loses
-    recall, never raises).
+    join shuffles ONLY the batch's (id_a, bkey) rows into each index
+    part's bucket layout (no Exchange above the bucketed scan —
+    plan-pinned), and rescoring joins the slim candidate ids against the
+    id-bucketed vectors tables the same way.  Probe widening defaults to
+    the recorded multiprobe (a caller may widen it, never narrow it —
+    mismatched widening silently loses recall).
 
-    The read binds to ONE resolved index generation (newest published,
-    or an explicit ``generation`` pin) — published generations are
-    immutable, so a nightly rebuild racing this read cannot change what
-    it scans (round 12).  Only the pre-generation FLAT layout
-    (generation 0) still refuses to read under a standing build claim:
-    flat tables were rewritten in place, so a dead mid-rewrite builder
-    means a possibly mismatched buckets/vectors/meta snapshot.
-
-    Round 12, late: the resolved generation's published APPEND SEGMENTS
-    (:func:`lsh_index_append`) are part of the snapshot — resolved once
-    alongside the generation; the candidate and rescore joins run PER
-    PART (base + each segment, co-located against that part's bucketed
-    layout, only the delta-sized batch shuffling) and union.  A racing
-    append is invisible by layout.  ``as_of_segment`` pins the segment
-    horizon: 0 = base only, N = segments <= N (explicit, never a silent
-    fallback)."""
-    from ..sinks import ConcurrentCommitError, _hadoop_fs
-    from .bucketing import index_gen_prefix, index_resolve
-
-    spark = eval_batch.sparkSession
-    gen = index_resolve(spark, table_prefix, generation)
-    if gen == 0:
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        fs, jpath = _hadoop_fs(spark, warehouse)
-        claim = _lsh_index_claim(warehouse, table_prefix)
-        if fs.exists(jpath(claim)):
-            raise ConcurrentCommitError(
-                f"decontaminate_incremental({table_prefix}): index build "
-                f"claim {claim} is held and no published generation "
-                "exists — the flat-layout buckets/vectors/meta snapshot "
-                "may be mismatched. Wait for the build, or rerun it if "
-                "its builder is known dead."
-            )
-    from .bucketing import index_seg_prefix, index_segments
-
-    segs = index_segments(spark, table_prefix, gen) if gen else []
-    if as_of_segment is not None:
-        if as_of_segment != 0 and as_of_segment not in segs:
-            raise FileNotFoundError(
-                f"decontaminate_incremental({table_prefix}): segment "
-                f"{as_of_segment} of generation {gen} not published "
-                f"(have {segs or 'none'}) — segment pinning is explicit, "
-                "never a silent fallback"
-            )
-        segs = [s for s in segs if s <= as_of_segment]
-    gp = index_gen_prefix(table_prefix, gen)
-    parts = [gp] + [index_seg_prefix(table_prefix, gen, s) for s in segs]
-    # cross-session seam: a segment published by ANOTHER session after
-    # this one attached is in the marker listing but not this session's
-    # catalog — attach any missing part before binding the plan
-    from .bucketing import ensure_attached
-
-    for p in parts:
-        ensure_attached(
-            spark, f"{p}_buckets", LSH_INDEX_BUCKETS_DDL, "bkey", LSH_INDEX_N_BUCKETS
-        )
-        ensure_attached(
-            spark, f"{p}_vectors", LSH_INDEX_VECTORS_DDL, "id", LSH_INDEX_N_BUCKETS
-        )
-    meta = spark.table(f"{gp}_meta").head()
-    n_planes, n_tables = int(meta["n_planes"]), int(meta["n_tables"])
-    dim, threshold = int(meta["dim"]), float(meta["threshold"])
-    probe = int(meta["multiprobe"]) if multiprobe is None else max(
-        int(meta["multiprobe"]), multiprobe
+    The read binds to ONE snapshot (bucketing.index_open): the newest
+    published generation or an explicit ``generation`` pin, and its
+    published append segments — all, or up to ``as_of_segment`` (0 =
+    base only).  Published tables are immutable, so a rebuild, append
+    or compaction racing this read cannot change what it scans."""
+    snap, d = index_target(
+        LSH_INDEX, eval_batch, table_prefix, generation, as_of_segment,
+        id_col=id_col, vec_col=vec_col,
     )
-    # buckets_df: the sharing contract (round 16, guide §4) — caller
-    # guarantees it was bucketed under the index's RECORDED
-    # (n_planes, n_tables) over this exact eval_batch; the streaming
-    # handler checks the recorded meta against its sizing before
-    # sharing (a mismatched frame silently loses candidates, which is
-    # why the default recomputes)
-    bkt = (
-        buckets_df
-        if buckets_df is not None
-        else with_lsh_buckets(
-            eval_batch, dim, n_planes=n_planes, n_tables=n_tables,
-            id_col=id_col, vec_col=vec_col,
-        )
+    p = snap.params
+    n_planes, dim, threshold = int(p["n_planes"]), int(p["dim"]), float(p["threshold"])
+    probe = max(int(p["multiprobe"]), multiprobe or 0)
+    ev = _multiprobe(
+        d.buckets.select(
+            F.col(d.id_col).alias("id_a"),
+            F.posexplode("buckets").alias("table", "bucket"),
+        ),
+        "id_a", probe, n_planes,
     )
-    ev = bkt.select(
-        F.col(id_col).alias("id_a"),
-        F.posexplode("buckets").alias("table", "bucket"),
-    )
-    if probe > 0:
-        ev = ev.select(
-            "id_a",
-            "table",
-            F.explode(
-                F.array(
-                    F.col("bucket"),
-                    *[
-                        F.col("bucket").bitwiseXOR(F.lit(1 << b))
-                        for b in range(min(probe, n_planes))
-                    ],
-                )
-            ).alias("bucket"),
-        )
-    evk = ev.select(
-        "id_a", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
-    )
+    evk = ev.select("id_a", F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey"))
     # one co-located probe join PER PART (ids disjoint across parts by
-    # the append-time duplicate check): the index side of each join
-    # reads its own bucket layout with zero Exchange; only the
-    # delta-sized evk shuffles, once per part
+    # the append-time duplicate check): only the delta-sized evk
+    # shuffles, once per part
     cand = functools.reduce(
         DataFrame.unionByName,
         [
-            evk.join(
-                spark.table(f"{p}_buckets").select(
-                    F.col("id").alias("id_b"), "bkey"
-                ),
-                "bkey",
-            )
-            for p in parts
+            evk.join(t.select(F.col("id").alias("id_b"), "bkey"), "bkey")
+            for t in snap.tables("_buckets")
         ],
     )
     cand = cand.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-    # Persist the (delta-sized, slim) candidate set when the snapshot is
-    # WIDE — the minhash read path's r13 finding, same shape: uncached,
-    # each per-part rescore branch re-executes the whole candidate
-    # union (P parts -> P^2 bucket scans).  Thresholded because the
-    # cache is not free: at 1-2 parts the materialization barrier
-    # measured +3.5 s on the append gate against zero win (AQE exchange
-    # reuse already covers narrow snapshots).  Released in the
-    # materialize block.
-    cache_cand = len(parts) > 2
+    # persist the slim candidate set when the snapshot is WIDE — the
+    # minhash read path's finding, same shape (uncached, P parts cost P^2
+    # bucket scans; at 1-2 parts the barrier costs more than it saves)
+    cache_cand = len(snap.parts) > 2
     if cache_cand:
         cand = cand.persist()
-    checked_norm = F.when(
-        F.size(F.col(vec_col)) == dim, norm2_seq(F.col(vec_col))
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"decontaminate_incremental: {vec_col} width != {dim}"
-                    " for id "
-                ),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
-    wa = eval_batch.select(
-        F.col(id_col).alias("id_a"),
-        checked_norm.alias("_na"),
-        *[F.col(vec_col)[i].cast("double").alias(f"_a{i}") for i in range(dim)],
+    wa = d.vectors.select(
+        F.col(d.id_col).alias("id_a"),
+        _checked_norm("decontaminate_incremental", dim, d.id_col, d.vec_col).alias("_na"),
+        *[F.col(d.vec_col)[i].cast("double").alias(f"_a{i}") for i in range(dim)],
     )
     # rescore PER PART for the same co-located-read reason, then union
     rescored = functools.reduce(
         DataFrame.unionByName,
         [
             cand.join(
-                spark.table(f"{p}_vectors").select(
+                t.select(
                     F.col("id").alias("id_b"),
                     F.col("nrm").alias("_nb"),
                     *[F.col("v")[i].alias(f"_b{i}") for i in range(dim)],
                 ),
                 "id_b",
             )
-            for p in parts
+            for t in snap.tables("_vectors")
         ],
     )
     dot = functools.reduce(
@@ -1569,6 +1039,8 @@ def decontaminate_incremental(
         result = result.localCheckpoint(eager=True)
         if cache_cand:
             cand.unpersist(blocking=False)
+        if d is not eval_batch:
+            d.release()
     return result
 
 
@@ -1659,7 +1131,6 @@ def ivf_topk(
 
 
 _IVF_GEN_FMT = "g=%08d"
-_IVF_SIDECARS = ("lists", "ids", "centroids", "meta", "append_log")
 
 
 def _ivf_generations(spark, path: str) -> list[int]:
@@ -1690,42 +1161,33 @@ def ivf_resolve(
 ) -> str:
     """The content directory one index read (or segment append) binds
     to, resolved ONCE per operation: ``path/g=NNNNNNNN`` for the newest
-    published generation (or an explicitly pinned older one), falling
-    back to ``path`` itself for a pre-generation FLAT-layout index
-    (read/append compatibility).  A published generation directory is
-    IMMUTABLE under retrain — ``ivf_retrain_swap`` stages a hidden
-    sibling and publishes a brand-new ``g=`` directory with one rename —
-    so a plan built over the resolved directory stays internally
-    consistent for its whole lifetime: the r10 snapshot-less-rewrite
-    reader race is closed by LAYOUT, not by locking (readers pinned to
-    the old generation keep answering from it until an explicit
-    :func:`ivf_vacuum_generations`).  ``gens`` lets a caller that
-    already listed the directory skip the re-listing — LIST is the
-    slow, billed operation on object stores, and the hot query paths
-    resolve + quiescence-check from ONE listing (r11 review finding).
-
-    ``generation=0`` is the EXPLICIT flat-layout pin (ADVICE r11: an
-    ``ivf_index_attach`` descriptor reports generation 0 for a legacy
-    index, and that value must round-trip back through every
-    ``generation=`` parameter instead of raising) — it resolves to
-    ``path`` itself exactly like the no-generations fallback, and fails
-    downstream with the ordinary missing-sidecar errors if no flat
-    index actually lives there."""
+    published generation, or an explicitly pinned older one.  A
+    published generation directory is IMMUTABLE under retrain —
+    ``ivf_retrain_swap`` stages a hidden sibling and publishes a
+    brand-new ``g=`` directory with one rename — so a plan built over
+    the resolved directory stays internally consistent for its whole
+    lifetime: the r10 snapshot-less-rewrite reader race is closed by
+    LAYOUT, not by locking (readers pinned to the old generation keep
+    answering from it until an explicit :func:`ivf_vacuum_generations`).
+    ``gens`` lets a caller that already listed the directory skip the
+    re-listing — LIST is the slow, billed operation on object stores.
+    A path with no published generation, or an unpublished pin, raises."""
     if gens is None:
         gens = _ivf_generations(spark, path)
-    if generation is not None:
-        if generation == 0:
-            return path.rstrip("/")
-        if generation not in gens:
+    if generation is None:
+        if not gens:
             raise FileNotFoundError(
-                f"ivf_resolve({path}): generation {generation} not "
-                f"present (have {gens}) — vacuumed or never published; "
-                "generation pinning is explicit, never a silent fallback"
+                f"ivf_resolve({path}): no published generation — build "
+                "the index first (ivf_build)"
             )
-        return f"{path.rstrip('/')}/{_IVF_GEN_FMT % generation}"
-    if gens:
-        return f"{path.rstrip('/')}/{_IVF_GEN_FMT % gens[-1]}"
-    return path.rstrip("/")
+        generation = gens[-1]
+    if generation not in gens:
+        raise FileNotFoundError(
+            f"ivf_resolve({path}): generation {generation} not "
+            f"present (have {gens}) — vacuumed or never published; "
+            "generation pinning is explicit, never a silent fallback"
+        )
+    return f"{path.rstrip('/')}/{_IVF_GEN_FMT % generation}"
 
 
 def _ivf_publish_generation(
@@ -1827,9 +1289,9 @@ def ivf_build(
     subdirectories (see ivf_append), nothing rewrites it.
 
     LIVE-INDEX REBUILDS DELEGATE (r11 review finding): when ``path``
-    already holds an index — generations published, or legacy flat
-    content — this routes through :func:`ivf_retrain_swap`, which holds
-    the commit claim and enforces the append/retrain mutual exclusion.
+    already holds a published generation, this routes through
+    :func:`ivf_retrain_swap`, which holds the commit claim and enforces
+    the append/retrain mutual exclusion.
     A claim-less build publishing over a live index would silently
     orphan an in-flight append's delta in the outgoing generation
     (exactly the case retrain refuses loudly); there is no safe
@@ -1843,9 +1305,7 @@ def ivf_build(
 
     spark = embeddings.sparkSession
     fs, jpath = _hadoop_fs(spark, path)
-    if _ivf_generations(spark, path) or fs.exists(
-        jpath(f"{path.rstrip('/')}/centroids")
-    ):
+    if _ivf_generations(spark, path):
         return ivf_retrain_swap(spark, path, embeddings, n_cells, id_col, vec_col)
     fs.mkdirs(jpath(path))
     staging = f"{path.rstrip('/')}/_g_stage_{_uuid.uuid4().hex[:8]}__"
@@ -2083,7 +1543,8 @@ def _parts_union(spark, parts: list[str], sub: str) -> DataFrame:
     Filters push through the union into every part's scan, so
     cell-partition pruning and id row-group skipping are preserved per
     part.  Built lazily per sidecar — the query_vec path never touches
-    ids (pytest-pinned: a pre-sidecar index still answers it)."""
+    ids (pytest-pinned: an index without its ids sidecar still answers
+    it)."""
     return functools.reduce(
         DataFrame.unionByName,
         [spark.read.parquet(f"{p}/{sub}") for p in parts],
@@ -2106,36 +1567,6 @@ def _append_claim(path: str) -> str:
     # underscore prefix: Spark's file listing ignores the marker, so a
     # reader listing the directory still parses clean
     return f"{path.rstrip('/')}/_ivf_append__"
-
-
-def _check_index_quiescent(
-    spark, path: str, gens: list[int] | None = None
-) -> None:
-    """The residual reader-side claim check.  Round 12, late: a
-    standing APPEND claim no longer blocks readers at all — appends
-    publish immutable SEGMENTS (an in-flight or died-mid-write append
-    is an unpublished directory no reader resolves), so the former
-    mid-append mismatched-snapshot hazard is closed BY LAYOUT, not by
-    refusal.  A RETRAIN claim stopped blocking generation-layout
-    readers at round 11 for the same reason (retrains stage a hidden
-    sibling and publish a brand-new ``g=`` directory).  What remains is
-    the legacy FLAT layout only: there a retrain retires the flat
-    content in place after publishing g=1, so a flat-layout read under
-    a standing retrain claim may straddle that retirement and refuses
-    loudly."""
-    from ..sinks import ConcurrentCommitError, _commit_claim, _hadoop_fs
-
-    if _ivf_generations(spark, path) if gens is None else gens:
-        return
-    fs, jpath = _hadoop_fs(spark, path)
-    claim = _commit_claim(path)
-    if fs.exists(jpath(claim)):
-        raise ConcurrentCommitError(
-            f"IVF index {path}: retrain-swap claim {claim} is held and "
-            "the index is the legacy FLAT layout (retired in place at "
-            "publish) — the snapshot may be mismatched. Wait for the "
-            "retrain, or rerun it if its writer is known dead."
-        )
 
 
 def ivf_append(
@@ -2217,8 +1648,8 @@ def ivf_append(
     claim = _append_claim(path)
     claim_marker(fs, jpath, claim, f"ivf_append({path})")
     # PRE-MUTATION SECTION: everything up to the first write runs under
-    # the claim but has touched nothing — ANY failure here (a pre-meta
-    # legacy index, a missing sidecar, the duplicate-id refusal)
+    # the claim but has touched nothing — ANY failure here (a damaged
+    # generation missing its meta, the duplicate-id refusal)
     # releases the claim and re-raises, because wedging a valid,
     # untouched index behind a marker whose remedy is "rerun the
     # append" would fail identically forever.  Only once mutation
@@ -2416,12 +1847,7 @@ def ivf_retrain_swap(
     retrain claim stands.  A retrain that fails before the publish
     leaves the old generation fully intact and answering
     (pytest-pinned); the staging directory is underscore-prefixed,
-    invisible to Spark file listings and to the generation resolver.
-
-    Legacy FLAT-layout indexes (pre-generation ivf_build, content at
-    ``path`` itself): the retrain publishes ``g=00000001`` and then
-    retires the flat sidecars — a straggling flat reader fails LOUDLY
-    on its next scan instead of silently mixing generations."""
+    invisible to Spark file listings and to the generation resolver."""
     from ..sinks import (
         ConcurrentCommitError,
         _commit_claim,
@@ -2440,9 +1866,6 @@ def ivf_retrain_swap(
         )
     claim = _commit_claim(path)
     claim_marker(fs, jpath, claim, f"ivf_retrain_swap({path})")
-    was_flat = not _ivf_generations(spark, path) and fs.exists(
-        jpath(f"{path.rstrip('/')}/centroids")
-    )
     staging = f"{path.rstrip('/')}/_g_stage_{_uuid.uuid4().hex[:8]}__"
     try:
         # close the check-then-act window against a concurrent append:
@@ -2461,18 +1884,7 @@ def ivf_retrain_swap(
         except BaseException:
             fs.delete(jpath(staging), True)
             raise
-        gen = _ivf_publish_generation(spark, path, staging)
-        if was_flat:
-            # the flat content is now shadowed by g=00000001 — retire it
-            # so the directory carries one source of truth (flat readers
-            # mid-scan fail loudly, never read mixed generations);
-            # flat-layout append segments retire with their base
-            for s in _ivf_segments(spark, path):
-                fs.delete(jpath(_ivf_seg_marker(path, s)), False)
-                fs.delete(jpath(_ivf_seg_dir(path, s)), True)
-            for side in _IVF_SIDECARS:
-                fs.delete(jpath(f"{path.rstrip('/')}/{side}"), True)
-        return gen
+        return _ivf_publish_generation(spark, path, staging)
     finally:
         # replace_table semantics (NOT the append's success-only rule):
         # a failure before the publish leaves the old generation intact
@@ -2546,15 +1958,6 @@ def ivf_compact(
                 "before the rewrite; retry after the append completes."
             )
         gens = _ivf_generations(spark, path)
-        if not gens:
-            # a legacy flat-layout compact would publish g=1 while the
-            # flat sidecars stay behind as a second source of truth —
-            # the retire step belongs to ivf_retrain_swap; route there
-            raise FileNotFoundError(
-                f"ivf_compact({path}): no published generation — the "
-                "legacy flat layout predates compaction; rebuild once "
-                "(ivf_retrain_swap) to adopt the generation layout."
-            )
         content = ivf_resolve(spark, path, gens=gens)
         segs = _ivf_segments(spark, content)
         if not segs:
@@ -2633,7 +2036,7 @@ def ivf_compact(
         gen = _ivf_publish_generation(spark, path, staging)
         return {
             "generation": gen,
-            "from_generation": gens[-1] if gens else 0,
+            "from_generation": gens[-1],
             "compacted_segments": segs,
             "total_rows": int(n_total),
             "appended_frac": float(frac),
@@ -2690,9 +2093,7 @@ def ivf_query_persisted(
     the newest — index time travel, the read_version counterpart; a
     vacuumed generation raises loudly — and ``as_of_segment`` to pin
     the within-generation append horizon (0 = base only)."""
-    gens = _ivf_generations(spark, path)  # ONE listing feeds both steps
-    _check_index_quiescent(spark, path, gens=gens)
-    content = ivf_resolve(spark, path, generation=generation, gens=gens)
+    content = ivf_resolve(spark, path, generation=generation)
     cents = spark.read.parquet(f"{content}/centroids").collect()
     cmat = np.vstack(
         [np.asarray(r["centroid"], dtype=np.float64) for r in sorted(
@@ -2783,9 +2184,7 @@ def ivf_batch_query_persisted(
     retrains never rewrite published content and appends land as new
     segments invisible to an already-resolved plan, so no
     materialize-while-quiescent caveat remains."""
-    gens = _ivf_generations(spark, path)  # ONE listing feeds both steps
-    _check_index_quiescent(spark, path, gens=gens)
-    content = ivf_resolve(spark, path, generation=generation, gens=gens)
+    content = ivf_resolve(spark, path, generation=generation)
     cents = spark.read.parquet(f"{content}/centroids").collect()
     cmat = np.vstack(
         [
@@ -2852,11 +2251,8 @@ def ivf_index_attach(spark, path: str, id_col: str = "vec_id") -> dict:
       with its driver: generation number, n_cells, build-time n_base,
       current total rows, accumulated appended fraction, and whether a
       retrain is already due — read from meta/centroids footers and
-      the append_log ledger, no list data scanned.  A legacy
-      flat-layout index reports ``generation=0``, which ROUND-TRIPS
-      (ADVICE r11): ``ivf_resolve``/the query paths accept 0 as the
-      explicit flat-layout pin, so feeding any descriptor field back
-      as a ``generation=`` argument is always valid.
+      the append_log ledger, no list data scanned.  The descriptor's
+      ``generation`` round-trips as a ``generation=`` pin (ADVICE r11).
 
     After a successful attach, ivf_query_persisted /
     ivf_batch_query_persisted / ivf_append on ``path`` behave exactly
@@ -2866,7 +2262,6 @@ def ivf_index_attach(spark, path: str, id_col: str = "vec_id") -> dict:
     from ..sinks import ConcurrentCommitError, _commit_claim, _hadoop_fs
 
     gens = _ivf_generations(spark, path)  # ONE listing feeds every step
-    _check_index_quiescent(spark, path, gens=gens)
     fs, jpath = _hadoop_fs(spark, path)
     # Attach is the MAINTENANCE entry point, not a hot read: unlike the
     # query paths (safe under a retrain because their resolved
@@ -2937,7 +2332,7 @@ def ivf_index_attach(spark, path: str, id_col: str = "vec_id") -> dict:
             appended_frac = float(last["appended_frac"])
             retrain_due = bool(last["retrain_due"])
     return {
-        "generation": gens[-1] if gens else 0,  # 0 = legacy flat layout
+        "generation": gens[-1],
         "segments": segs,
         "n_cells": int(n_cells),
         "dim": int(dim_row["d"]),

@@ -159,11 +159,11 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # indexes must fail loudly until repaired) — but THIS prefix is
         # a random throwaway, so an orphaned marker would just litter
         # the shared warehouse forever (round-9 advisory): drop it too
-        from ..operators.dedup import _index_claim
+        from ..operators.bucketing import index_claim
         from ..sinks import _hadoop_fs
 
         fs, jpath = _hadoop_fs(spark, spark.conf.get("spark.sql.warehouse.dir"))
-        fs.delete(jpath(_index_claim(spark.conf.get("spark.sql.warehouse.dir"), prefix)), False)
+        fs.delete(jpath(index_claim(spark.conf.get("spark.sql.warehouse.dir"), prefix)), False)
     return result
 
 
@@ -229,8 +229,12 @@ def dedup_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention — python -O strips asserts)."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
-    from ..operators.dedup import incremental_dedup_pairs, minhash_index_build
+    from ..operators.bucketing import index_drop_all, index_open
+    from ..operators.dedup import (
+        MINHASH_INDEX,
+        incremental_dedup_pairs,
+        minhash_index_build,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     snapshot = docs.filter(F.col("doc_id") % 4 != 0)
@@ -238,16 +242,16 @@ def dedup_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 4 == 0)
     prefix = f"ttgate_{_uuid.uuid4().hex[:8]}"
     try:
-        # ONE full-corpus shingling/signing pass shared by BOTH builds
-        # and the screens (round 15, guide §1.2): snapshot (3/4 of the
-        # corpus), survivors (2/4) and batch (1/4) overlap, so building
-        # each from its own pass shingled 1.5 corpus-equivalents; hs/sig
-        # are per-document, so filtering one checkpointed full pass is
-        # bit-identical and touches each document once.
+        # ONE shingling/signing pass over the snapshot shared by BOTH
+        # builds (round 15, guide §1.2): survivors (2/4 of the corpus)
+        # lie inside snapshot (3/4), and hs/sig are per-document, so
+        # filtering one checkpointed pass is bit-identical; the batch
+        # (the other 1/4) is signed once by its delta below, so every
+        # document is touched once.
         from ..operators.dedup import minhash_signatures, shingle_hash_sets
 
-        hs_all = shingle_hash_sets(docs).localCheckpoint(eager=True)
-        sig_all = minhash_signatures(docs, hs_df=hs_all).localCheckpoint(
+        hs_all = shingle_hash_sets(snapshot).localCheckpoint(eager=True)
+        sig_all = minhash_signatures(snapshot, hs_df=hs_all).localCheckpoint(
             eager=True
         )
 
@@ -264,22 +268,25 @@ def dedup_index_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if (g1, g2) != (1, 2):
             raise RuntimeError(f"expected generations (1, 2), got ({g1}, {g2})")
-        share = _sub(F.col("id") % 4 == 0)
+        # the batch's delta, shared by both screens: generation 1 and 2
+        # record the same parameters, so one signing pass serves both
+        d = index_open(spark, MINHASH_INDEX, prefix).delta(batch)
         pinned = incremental_dedup_pairs(
-            batch, prefix, threshold=0.8, generation=1, **share
+            d, prefix, threshold=0.8, generation=1
         ).select(F.lit(1).cast("long").alias("generation"), "old_id", "new_id", "jaccard")
-        fresh = incremental_dedup_pairs(batch, prefix, threshold=0.8, **share).select(
+        fresh = incremental_dedup_pairs(d, prefix, threshold=0.8).select(
             F.lit(2).cast("long").alias("generation"), "old_id", "new_id", "jaccard"
         )
         result = pinned.unionByName(fresh).localCheckpoint(eager=True)
+        d.release()
     finally:
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
-        from ..operators.dedup import _index_claim
+        from ..operators.bucketing import index_claim
         from ..sinks import _hadoop_fs
 
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result
 
 
@@ -343,8 +350,9 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariants raise RuntimeError (loud-failure convention)."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
+    from ..operators.bucketing import index_drop_all, index_open
     from ..operators.dedup import (
+        MINHASH_INDEX,
         incremental_dedup_pairs,
         minhash_index_append,
         minhash_index_build,
@@ -363,28 +371,25 @@ def dedup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"expected build gen 1 + segment 1, got ({g}, "
                 f"{audit['generation']}, {audit['segment']})"
             )
-        # ONE shingling/signing pass for every screen of the same batch
-        # (round 13: the operators' hs_df/sig_df sharing parameters)
-        from ..operators.dedup import minhash_signatures, shingle_hash_sets
-
-        hs = shingle_hash_sets(batch).localCheckpoint(eager=True)
-        sig = minhash_signatures(batch, hs_df=hs).localCheckpoint(eager=True)
-        share = dict(hs_df=hs, sig_df=sig)
+        # ONE shingling/signing pass (the snapshot's delta) for every
+        # screen of the same batch
+        d = index_open(spark, MINHASH_INDEX, prefix).delta(batch)
         pinned = incremental_dedup_pairs(
-            batch, prefix, threshold=0.8, as_of_segment=0, **share
+            d, prefix, threshold=0.8, as_of_segment=0
         ).select(F.lit("base").alias("phase"), "old_id", "new_id", "jaccard")
-        fresh = incremental_dedup_pairs(batch, prefix, threshold=0.8, **share).select(
+        fresh = incremental_dedup_pairs(d, prefix, threshold=0.8).select(
             F.lit("appended").alias("phase"), "old_id", "new_id", "jaccard"
         )
         result = pinned.unionByName(fresh).localCheckpoint(eager=True)
+        d.release()
     finally:
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
-        from ..operators.dedup import _index_claim
+        from ..operators.bucketing import index_claim
         from ..sinks import _hadoop_fs
 
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result
 
 
@@ -460,15 +465,18 @@ def dedup_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.filter(F.col("doc_id") % 4 == 0)
     prefix = f"vacgate_{_uuid.uuid4().hex[:8]}"
     try:
-        # ONE full-corpus shingling/signing pass shared by the builds,
-        # the append, and the final screen (round 15, guide §1.2): the
-        # base/segment/survivor subsets overlap (%4==2 is indexed twice),
-        # so per-phase passes shingled 1.5 corpus-equivalents; hs/sig
-        # are per-document, filtering one checkpointed pass is identical.
+        # ONE shingling/signing pass over the indexed 3/4 of the corpus
+        # shared by both builds (round 15, guide §1.2): the base and
+        # survivor subsets overlap (%4==2 is indexed twice), and hs/sig
+        # are per-document, so filtering one checkpointed pass is
+        # identical.  The append and the screen shingle their own
+        # quarter: an index append or screen takes only its batch (or a
+        # snapshot's delta), never caller-computed frames.
         from ..operators.dedup import minhash_signatures, shingle_hash_sets
 
-        hs_all = shingle_hash_sets(docs).localCheckpoint(eager=True)
-        sig_all = minhash_signatures(docs, hs_df=hs_all).localCheckpoint(
+        indexed = docs.filter(F.col("doc_id") % 4 != 0)
+        hs_all = shingle_hash_sets(indexed).localCheckpoint(eager=True)
+        sig_all = minhash_signatures(indexed, hs_df=hs_all).localCheckpoint(
             eager=True
         )
 
@@ -480,9 +488,7 @@ def dedup_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         g1 = minhash_index_build(
             base, prefix, **_sub((F.col("id") % 4).isin([1, 2]))
         )
-        audit = minhash_index_append(
-            seg, prefix, **_sub(F.col("id") % 4 == 3)
-        )
+        audit = minhash_index_append(seg, prefix)
         g2 = minhash_index_build(
             survivors, prefix, **_sub((F.col("id") % 4).isin([2, 3]))
         )
@@ -504,9 +510,7 @@ def dedup_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "must raise, never silently re-resolve"
             )
         result = (
-            incremental_dedup_pairs(
-                batch, prefix, threshold=0.8, **_sub(F.col("id") % 4 == 0)
-            )
+            incremental_dedup_pairs(batch, prefix, threshold=0.8)
             .select(
                 F.lit(2).cast("long").alias("surviving_generation"),
                 F.lit(1).cast("long").alias("removed_generation"),
@@ -518,12 +522,12 @@ def dedup_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
-        from ..operators.dedup import _index_claim
+        from ..operators.bucketing import index_claim
         from ..sinks import _hadoop_fs
 
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result
 
 
@@ -590,8 +594,9 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-recall contingency as dedup_incremental_pairs."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
+    from ..operators.bucketing import index_drop_all, index_open
     from ..operators.dedup import (
+        MINHASH_INDEX,
         incremental_dedup_pairs,
         minhash_index_append,
         minhash_index_build,
@@ -620,35 +625,31 @@ def dedup_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"compacted generation must reset the trigger, got {st}"
             )
-        # ONE shingling/signing pass for every screen of the same batch
-        # (round 13: the operators' hs_df/sig_df sharing parameters)
-        from ..operators.dedup import minhash_signatures, shingle_hash_sets
-
-        hs = shingle_hash_sets(batch).localCheckpoint(eager=True)
-        sig = minhash_signatures(batch, hs_df=hs).localCheckpoint(eager=True)
-        share = dict(hs_df=hs, sig_df=sig)
+        # ONE shingling/signing pass (the snapshot's delta) for every
+        # screen of the same batch: compaction carries the parameters
+        # verbatim, so the generation-1 pins accept the same delta
+        d = index_open(spark, MINHASH_INDEX, prefix).delta(batch)
         pre = incremental_dedup_pairs(
-            batch, prefix, threshold=0.8, generation=1, as_of_segment=0, **share
+            d, prefix, threshold=0.8, generation=1, as_of_segment=0
         ).select(F.lit("pre").alias("phase"), "old_id", "new_id", "jaccard")
         wide = incremental_dedup_pairs(
-            batch, prefix, threshold=0.8, generation=1, **share
+            d, prefix, threshold=0.8, generation=1
         ).select(F.lit("wide").alias("phase"), "old_id", "new_id", "jaccard")
-        compacted = incremental_dedup_pairs(
-            batch, prefix, threshold=0.8, **share
-        ).select(
+        compacted = incremental_dedup_pairs(d, prefix, threshold=0.8).select(
             F.lit("compacted").alias("phase"), "old_id", "new_id", "jaccard"
         )
         result = pre.unionByName(wide).unionByName(compacted).localCheckpoint(
             eager=True
         )
+        d.release()
     finally:
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
-        from ..operators.dedup import _index_claim
+        from ..operators.bucketing import index_claim
         from ..sinks import _hadoop_fs
 
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result
 
 
@@ -1483,8 +1484,8 @@ def dedup_decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFra
 
     from pyspark.sql import Window
 
+    from ..operators.bucketing import index_claim
     from ..operators.similarity import (
-        _lsh_index_claim,
         decontaminate_incremental,
         lsh_index_build,
     )
@@ -1523,10 +1524,10 @@ def dedup_decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         from ..operators.bucketing import index_drop_all
         from ..sinks import _hadoop_fs
 
-        index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
+        index_drop_all(spark, prefix, ("_buckets", "_vectors"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result
 
 
@@ -1577,8 +1578,8 @@ def dedup_decontaminate_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
+    from ..operators.bucketing import index_claim
     from ..operators.similarity import (
-        _lsh_index_claim,
         decontaminate_incremental,
         lsh_index_append,
         lsh_index_build,
@@ -1640,8 +1641,8 @@ def dedup_decontaminate_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..operators.bucketing import index_drop_all
         from ..sinks import _hadoop_fs
 
-        index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
+        index_drop_all(spark, prefix, ("_buckets", "_vectors"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
     return result

@@ -335,8 +335,7 @@ def stream_continuous_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     rescanned."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
-    from ..operators.dedup import _index_claim
+    from ..operators.bucketing import index_claim, index_drop_all
     from ..sinks import _hadoop_fs
     from ..streaming.dedup import PAIRS_DDL, continuous_index_dedup
 
@@ -362,7 +361,7 @@ def stream_continuous_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
     return pairs
 
@@ -392,8 +391,7 @@ def stream_continuous_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataF
     time travel, and vacuum like any other generation."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
-    from ..operators.similarity import _lsh_index_claim
+    from ..operators.bucketing import index_claim, index_drop_all
     from ..sinks import _hadoop_fs
     from ..streaming.dedup import EMB_PAIRS_DDL, continuous_embedding_dedup
 
@@ -416,10 +414,10 @@ def stream_continuous_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataF
             .localCheckpoint(eager=True)
         )
     finally:
-        index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
+        index_drop_all(spark, prefix, ("_buckets", "_vectors"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
     return pairs
 
@@ -481,9 +479,8 @@ def stream_continuous_index_dedup_compacted(
     pass + co-located probe joins, never a corpus rescan."""
     import uuid as _uuid
 
-    from ..operators.bucketing import index_drop_all
+    from ..operators.bucketing import index_claim, index_drop_all
     from ..operators.dedup import (
-        _index_claim,
         minhash_index_compact,
         minhash_index_status,
     )
@@ -531,7 +528,7 @@ def stream_continuous_index_dedup_compacted(
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
     return result
 
@@ -634,7 +631,7 @@ def stream_continuous_embedding_dedup_maintained(
     generation, and lands it as gen 2's first append segment.
 
     Result rows: one sizing row per generation read back from the
-    index's {{prefix}}_meta tables (generation, n_planes, n_tables,
+    index's per-generation params sidecars (generation, n_planes, n_tables,
     multiprobe, basis_rows, n_segments; pair columns -1), plus the
     accumulated distinct pair set (sizing columns -1).  The oracle
     replays both generations' sizing in SQL from the corpus counts
@@ -647,14 +644,10 @@ def stream_continuous_embedding_dedup_maintained(
     retrain is one bounded corpus pass between micro-batches; per
     batch the stream still pays one bucketing pass + co-located probe
     joins, never a corpus rescan."""
-    from ..operators.bucketing import (
-        index_drop_all,
-        index_gen_prefix,
-        index_segments,
-    )
+    from ..operators.bucketing import index_claim, index_drop_all, index_open
     from ..operators.similarity import (
+        LSH_INDEX,
         N_PLANES,
-        _lsh_index_claim,
         lsh_index_build,
         lsh_index_status,
     )
@@ -696,11 +689,12 @@ def stream_continuous_embedding_dedup_maintained(
             (
                 g,
                 int(m["n_planes"]), int(m["n_tables"]), int(m["multiprobe"]),
-                int(m["n_rows"]), len(index_segments(spark, prefix, g)),
+                int(m["n_rows"]), len(snap.segments),
                 -1, -1, -1.0,
             )
             for g in (1, 2)
-            for m in [spark.table(f"{index_gen_prefix(prefix, g)}_meta").head()]
+            for snap in [index_open(spark, LSH_INDEX, prefix, generation=g)]
+            for m in [snap.params]
         ]
         pairs = (
             spark.read.schema(EMB_PAIRS_DDL)
@@ -722,10 +716,10 @@ def stream_continuous_embedding_dedup_maintained(
             .localCheckpoint(eager=True)
         )
     finally:
-        index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
+        index_drop_all(spark, prefix, ("_buckets", "_vectors"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
     return result
 

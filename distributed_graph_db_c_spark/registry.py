@@ -85,11 +85,10 @@ DRIVER_WINDOW = 50
 # (b) changed-code re-pins — the round-15 diff lands on the ADVICE r14
 # seams, and evidence follows the diff: (1) the _BUCKET_SPEC sidecar
 # byte format (ADVICE r14 low #1) — write_json_sidecar now writes RAW
-# UTF-8 JSON instead of Java writeUTF framing (2-byte length prefix,
-# 64 KiB cap, modified UTF-8), and read_bucket_spec reads the full
-# stream (accepting legacy writeUTF framing for sidecars already on
-# disk), which changes the cross-session bucket-spec read path of
-# every segment-aware index read; (2) the sidecar republish path
+# UTF-8 JSON instead of a 2-byte-length-prefixed Java framing (64 KiB
+# cap, modified UTF-8), and read_bucket_spec reads the full stream,
+# which changes the cross-session bucket-spec read path of every
+# segment-aware index read; (2) the sidecar republish path
 # (ADVICE r14 low #2) now renames the old sidecar to a hidden backup
 # before replacing it, so a concurrent reader never observes absence.
 # Both land in operators/bucketing.py, so the same three gates whose
@@ -232,8 +231,8 @@ _STALE_RAMP: list[str] = [
 # differential rows in ORACLE_LOCAL when a dep-present environment
 # runs them; (b) transformWithState migration A/B when the protobuf
 # runtime ships (twins + equality pins exist); (c) DONE this round —
-# the r14 ADVICE seams (raw-UTF-8 sidecar bytes with legacy-framing
-# fallback, republish backup rename, hs_dir redelivery dedup +
+# the r14 ADVICE seams (raw-UTF-8 sidecar bytes, republish backup
+# rename, hs_dir redelivery dedup +
 # compaction) and the maintained-stream oracle gate itself.
 
 # Streaming events consumers LAST inside the window: each runs a real

@@ -228,80 +228,47 @@ def continuous_embedding_dedup(
     co-located probe join per index part — the corpus is never
     rescanned; maintenance (compaction / retrain) applies between
     batches exactly as pinned for the minhash stream."""
-    from functools import reduce as _reduce
-
-    from ..operators.bucketing import (
-        index_gen_prefix,
-        index_generations,
-        index_resolve,
-        index_seg_prefix,
-        index_segments,
-    )
+    from ..operators.bucketing import count_and_distinct, index_generations, index_open
     from ..operators.similarity import (
+        LSH_INDEX,
         N_PLANES,
         cosine_lsh_pairs,
         decontaminate_incremental,
         lsh_index_append,
         lsh_index_build,
+        lsh_params_for,
+        with_lsh_buckets,
     )
+
+    def _dup_refusal(batch_id):
+        return ValueError(
+            f"continuous_embedding_dedup({table_prefix}): batch "
+            f"{batch_id} has internally duplicated {id_col} values "
+            "— the same vector would index and score twice. "
+            "Nothing was written."
+        )
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
-
-        # ADVICE r13 (low): an EMPTY micro-batch is a no-op — the same
-        # shape as the minhash handler's zero-indexable guard (an empty
-        # batch could never classify as a replay under `n_batch > 0`,
-        # so each crash-redelivery appended another empty segment, and
-        # an empty FIRST batch would bootstrap a zero-row plane basis).
-        # Round 15 (guide §1.2): count + distinct-count fused into one
-        # aggregation job — two passes over the pinned batch become one.
-        # Round 16 (guide §1.2): the WIDTH term rides the same
-        # aggregation (identical expression to lsh_index_append's fused
-        # validation — NULL size lands in otherwise(0)), so the append
-        # can skip its own validation pass entirely (``precounted``).
-        _vrow = batch.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col(id_col)).alias("d"),
-            F.max(F.col(id_col).isNull().cast("int")).alias("has_null"),
-            F.sum(
-                F.when(F.size(F.col(vec_col)) != dim, 1).otherwise(0)
-            ).alias("n_bad"),
-        ).head()
-        n_batch = int(_vrow["n"])
-        n_ids = int(_vrow["d"]) + int(_vrow["has_null"] or 0)
-        n_bad = int(_vrow["n_bad"] or 0)
-        if n_batch == 0:
-            return
-        # internal duplicate ids refuse BEFORE any write, for EVERY
-        # batch including the bootstrap (round 14 review):
-        # lsh_index_build has no duplicate check — unlike
-        # lsh_index_append, which refuses them on every later batch —
-        # so a duplicated first batch would silently build a
-        # generation that double-scores that vector in every screen,
-        # permanently; and on later batches the append's own refusal
-        # fires only after the pairs write (harmless but churny).
-        if n_ids != n_batch:
-            raise ValueError(
-                f"continuous_embedding_dedup({table_prefix}): batch "
-                f"{batch_id} has internally duplicated {id_col} values "
-                "— the same vector would index and score twice. "
-                "Nothing was written."
-            )
-        # n_rows=n_batch (round 15, guide §1.2): the auto-sizing inside
-        # cosine_lsh_pairs and lsh_index_build would each re-count the
-        # pinned batch — the count is already in hand and identical, so
-        # the sizing (and therefore every result bit) is unchanged.
-        # buckets_df (round 16, guide §4): BOTH bootstrap phases size
-        # via the same lsh_params_for(n_batch, threshold,
-        # min_multiprobe=N_PLANES) call, so their (n_planes, n_tables)
-        # match by construction — ONE Arrow bucketing pass over the
-        # pinned batch serves the within-batch pairs and the build
-        # (buckets are a pure per-row function of the vector and those
-        # parameters, so sharing is exact).
-        from ..operators.similarity import lsh_params_for, with_lsh_buckets
-
+        # An EMPTY micro-batch is a no-op (ADVICE r13: it could never
+        # classify as a replay, so each crash-redelivery would publish
+        # another empty segment, and an empty FIRST batch would
+        # bootstrap a zero-row plane basis).  Internal duplicate ids
+        # refuse BEFORE any write, for every batch including the
+        # bootstrap: lsh_index_build has no duplicate check, so a
+        # duplicated first batch would build a generation that
+        # double-scores that vector in every screen, permanently.
         if not index_generations(spark, table_prefix):
+            n_batch, n_ids = count_and_distinct(batch, id_col)
+            if n_batch == 0:
+                return
+            if n_ids != n_batch:
+                raise _dup_refusal(batch_id)
+            # the within-batch pairs and the build size via the same
+            # lsh_params_for call, so ONE Arrow bucketing pass serves
+            # both (buckets are a pure per-row function of the vector
+            # and those parameters, so sharing is exact)
             b_planes, b_tables, _bp, _ = lsh_params_for(
                 n_batch, threshold, min_multiprobe=N_PLANES
             )
@@ -323,125 +290,66 @@ def continuous_embedding_dedup(
                 n_rows=n_batch, buckets_df=boot_buckets,
             )
             return
-        # classify BEFORE any write — the minhash handler's three cases
-        gen = index_resolve(spark, table_prefix)
-        parts = [index_gen_prefix(table_prefix, gen)] + [
-            index_seg_prefix(table_prefix, gen, s)
-            for s in index_segments(spark, table_prefix, gen)
-        ]
-        # cross-session seam (round 14 review): the classify step reads
-        # the resolved parts BEFORE the screen call whose own
-        # ensure_attached would self-heal them — a segment another
-        # session (the nightly job this stream converges with)
-        # published since this session attached would otherwise kill
-        # the stream with TABLE_OR_VIEW_NOT_FOUND on every redelivery
-        from ..operators.bucketing import ensure_attached
-        from ..operators.similarity import (
-            LSH_INDEX_N_BUCKETS,
-            LSH_INDEX_VECTORS_DDL,
-        )
-
-        for p in parts:
-            ensure_attached(
-                spark, f"{p}_vectors", LSH_INDEX_VECTORS_DDL, "id",
-                LSH_INDEX_N_BUCKETS,
+        # ONE snapshot per batch: the classify, screen and append all
+        # bind to it, and ONE delta — one validation aggregate, one
+        # Arrow bucketing pass under the snapshot's recorded planes —
+        # serves all three
+        snap = index_open(spark, LSH_INDEX, table_prefix)
+        d = snap.delta(batch, id_col=id_col, vec_col=vec_col)
+        try:
+            n_batch, n_ids, _n_bad = d.counts
+            if n_batch == 0:
+                return
+            if n_ids != n_batch:
+                raise _dup_refusal(batch_id)
+            # classify BEFORE any write — the minhash handler's three
+            # cases (all-new / fully-indexed replay / partial id reuse)
+            n_in = snap.n_indexed(d.ids)
+            if 0 < n_in < n_batch:
+                raise ValueError(
+                    f"continuous_embedding_dedup({table_prefix}): batch "
+                    f"{batch_id} has {n_in}/{n_batch} ids already indexed — "
+                    "id REUSE across batches, not a replay; stream ids must "
+                    "be unique. Nothing was written."
+                )
+            cross = (
+                decontaminate_incremental(d, table_prefix)
+                .filter(F.col("id_a") != F.col("id_b"))
+                .select(
+                    F.least("id_a", "id_b").alias("id_a"),
+                    F.greatest("id_a", "id_b").alias("id_b"),
+                    "cosine",
+                )
             )
-        existing = _reduce(
-            DataFrame.unionByName,
-            [spark.table(f"{p}_vectors").select("id") for p in parts],
-        )
-        n_in = (
-            batch.select(F.col(id_col).alias("id"))
-            .join(existing, "id", "left_semi")
-            .count()
-        )
-        if 0 < n_in < n_batch:
-            raise ValueError(
-                f"continuous_embedding_dedup({table_prefix}): batch "
-                f"{batch_id} has {n_in}/{n_batch} ids already indexed — "
-                "id REUSE across batches, not a replay; stream ids must "
-                "be unique. Nothing was written."
+            # the within pass sizes from n_batch; whenever that sizing
+            # coincides with the recorded one (every batch at gate
+            # scale) it shares the delta's buckets, else it buckets anew
+            w_planes, w_tables, _wp, _ = lsh_params_for(
+                n_batch, threshold, min_multiprobe=N_PLANES
             )
-        replay = n_in == n_batch  # n_batch > 0 guaranteed above
-        # ONE Arrow bucketing pass per batch (round 16, guide §4 — the
-        # minhash handler's hs_df/sig_df sharing applied to the
-        # embedding boundary): the screen, the within-batch pairs and
-        # the append each bucket the SAME pinned batch.  The screen and
-        # append use the index's RECORDED (n_planes, n_tables) — read
-        # once here from the generation's meta — and the within pass
-        # auto-sizes from n_batch; whenever the two sizings coincide
-        # (every batch at gate scale) all three phases share the one
-        # pass, else the within pass recomputes its own.  Buckets are a
-        # pure per-row function of (vector, dim, planes, tables), so
-        # sharing is bit-exact.
-        from ..operators.similarity import (
-            _ensure_meta_attached,
-            lsh_params_for,
-            with_lsh_buckets,
-        )
-
-        _ensure_meta_attached(spark, parts[0])
-        _meta = spark.table(f"{parts[0]}_meta").head()
-        m_planes, m_tables, m_dim = (
-            int(_meta["n_planes"]), int(_meta["n_tables"]), int(_meta["dim"]),
-        )
-        idx_buckets = None
-        if m_dim == dim:
-            idx_buckets = with_lsh_buckets(
-                batch, dim, n_planes=m_planes, n_tables=m_tables,
-                id_col=id_col, vec_col=vec_col,
-            ).localCheckpoint(eager=True)
-        w_planes, w_tables, _wp, _ = lsh_params_for(
-            n_batch, threshold, min_multiprobe=N_PLANES
-        )
-        within_buckets = (
-            idx_buckets if (w_planes, w_tables) == (m_planes, m_tables) else None
-        )
-        cross = (
-            decontaminate_incremental(
-                batch, table_prefix, id_col=id_col, vec_col=vec_col,
-                buckets_df=idx_buckets,
+            p = snap.params
+            shared = (w_planes, w_tables, dim) == (p["n_planes"], p["n_tables"], p["dim"])
+            within = cosine_lsh_pairs(
+                batch, threshold, dim, id_col, vec_col, multiprobe=N_PLANES,
+                n_rows=n_batch, buckets_df=d.buckets if shared else None,
+            ).select(
+                F.col("id_a").cast("long"), F.col("id_b").cast("long"), "cosine"
             )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-                "cosine",
-            )
-        )
-        within = cosine_lsh_pairs(
-            batch, threshold, dim, id_col, vec_col, multiprobe=N_PLANES,
-            n_rows=n_batch, buckets_df=within_buckets,
-        ).select(
-            F.col("id_a").cast("long"), F.col("id_b").cast("long"), "cosine"
-        )
-        cross.unionByName(within).write.mode("append").parquet(pairs_dir)
-        if not replay:
-            # check_duplicate_ids=False (round 15, guide §1.2): the
-            # classification above already semi-joined the batch's ids
-            # against every part and proved ALL-NEW — the append's
-            # index-side duplicate check would re-run the identical
-            # join; the ivf handler's standing subsumption argument.
-            # The append's INTERNAL duplicate check still runs.
-            # SINGLE-WRITER ASSUMPTION (ADVICE r15): the classify ran
-            # OUTSIDE the index claim, so a segment with overlapping ids
-            # published by a concurrent writer between classify and
-            # append is not re-checked inside the claim.  foreachBatch
-            # handlers are inherently single-writer per index (one
-            # stream owns its index; the nightly job converges BETWEEN
-            # batches, and its own append takes the claim) — a
-            # deployment with genuinely concurrent id-overlapping
-            # writers must keep check_duplicate_ids=True.
-            # buckets_df + precounted (round 16, guide §1.2/§4): the
-            # shared bucketing pass and this batch's fused validation
-            # counts ride into the append — two fewer jobs per batch
-            # (the Arrow re-bucketing and the validation aggregation),
-            # same refusal order and values by construction.
-            lsh_index_append(
-                batch, table_prefix, id_col=id_col, vec_col=vec_col,
-                check_duplicate_ids=False, buckets_df=idx_buckets,
-                precounted=(n_batch, n_ids, n_bad, dim),
-            )
+            cross.unionByName(within).write.mode("append").parquet(pairs_dir)
+            if n_in == 0:
+                # check_duplicate_ids=False: the classify above already
+                # proved the batch ALL-NEW against every part (the ivf
+                # handler's subsumption argument); the delta's internal
+                # checks still run.  SINGLE-WRITER ASSUMPTION (ADVICE
+                # r15): the classify ran outside the index claim, so
+                # overlapping ids published by a concurrent writer in
+                # between are not re-checked — one stream owns its index
+                # and the nightly job converges BETWEEN batches.  A new
+                # generation published in between makes the append
+                # refuse (the delta belongs to the old one).
+                lsh_index_append(d, table_prefix, check_duplicate_ids=False)
+        finally:
+            d.release()
 
     return handle
 
@@ -631,135 +539,88 @@ def continuous_index_dedup(
     operating point is the family's standard 64-perm/16x4 banding on
     BOTH the index and within-batch paths (one point, one recall
     contingency — which is why the handler exposes no banding knobs)."""
-    from ..operators.bucketing import index_generations
+    from ..operators.bucketing import index_generations, index_open
     from ..operators.dedup import (
+        MINHASH_INDEX,
         incremental_dedup_pairs,
         minhash_dedup_pairs,
         minhash_index_append,
         minhash_index_build,
+        minhash_signatures,
+        shingle_hash_sets,
     )
+
+    kw = dict(k=k, id_col=id_col, text_col=text_col)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         # pin the micro-batch: the handler takes several actions over it
         # and must not re-read the streaming source per action
         batch = batch.localCheckpoint(eager=True)
-        kw = dict(k=k, id_col=id_col, text_col=text_col)
-        # ONE shingling + ONE signing pass per batch, shared by every
-        # phase below (r13 profile: the pre-sharing handler re-shingled
-        # the batch ~4x and re-signed it 3x — classify, screen, within,
-        # append each recomputed them; the phases' input is the pinned
-        # batch, so sharing is exact).  Eager localCheckpoint, because
-        # these frames feed actions across several separate jobs.
-        from ..operators.dedup import minhash_signatures, shingle_hash_sets
-
-        hs = shingle_hash_sets(batch, k, id_col, text_col).localCheckpoint(
-            eager=True
-        )
-        # ADVICE r13 (low): a batch with ZERO indexable rows (empty
-        # micro-batch, or every doc under k tokens) is a NO-OP — no
-        # pair can form (both pair paths require shingles) and there
-        # is nothing to index.  Without this, such a batch can never
-        # classify as a replay (n_in == n_indexable == 0 fails the
-        # `n_indexable > 0` replay test), so every crash-redelivery
-        # appended and PUBLISHED another empty segment, silently
-        # widening every subsequent read plan until the max_segments
-        # arm tripped; it would likewise bootstrap an empty generation
-        # whose zero-row basis poisons the retrain ledger
-        # (appended_frac = inf from the first real batch).  The guard
-        # sits BEFORE the signing pass: hs is already materialized, so
-        # the count is cheap, and a discarded batch must not pay a
-        # full signature job it will throw away.
-        n_indexable = hs.count()
-        if n_indexable == 0:
-            return
-        sig = minhash_signatures(
-            batch, k=k, id_col=id_col, text_col=text_col, hs_df=hs
-        ).localCheckpoint(eager=True)
-        share = dict(hs_df=hs, sig_df=sig)
+        # A batch with ZERO indexable rows (empty, or every doc under k
+        # tokens) is a NO-OP (ADVICE r13): no pair can form and there is
+        # nothing to index, while such a batch could never classify as a
+        # replay — each crash-redelivery would publish another empty
+        # segment, or bootstrap a zero-row generation whose basis
+        # poisons the retrain ledger.  The guard runs before signing, so
+        # a discarded batch pays no signature job.
         if not index_generations(spark, table_prefix):
             # bootstrap: within-batch pairs, then generation 1 (the
-            # marker create is this batch's commit point)
-            minhash_dedup_pairs(
-                batch, threshold=threshold, **kw, **share
-            ).write.mode("append").parquet(pairs_dir)
-            minhash_index_build(batch, table_prefix, **kw, **share)
+            # marker create is this batch's commit point), sharing one
+            # shingling + signing pass
+            hs = shingle_hash_sets(batch, k, id_col, text_col).persist()
+            sig = minhash_signatures(batch, hs_df=hs, **kw).persist()
+            try:
+                if hs.count() == 0:
+                    return
+                minhash_dedup_pairs(
+                    batch, threshold=threshold, **kw, hs_df=hs, sig_df=sig
+                ).write.mode("append").parquet(pairs_dir)
+                minhash_index_build(batch, table_prefix, **kw, hs_df=hs, sig_df=sig)
+            finally:
+                sig.unpersist(blocking=False)
+                hs.unpersist(blocking=False)
             return
-        # classify BEFORE any write (see the docstring's three cases):
-        # one delta-sized semi-join of the batch's INDEXABLE ids (docs
-        # with < k tokens never enter the shingle store, so the raw
-        # count would misclassify) against the snapshot's indexed ids
-        from functools import reduce as _reduce
-
-        from ..operators.bucketing import (
-            index_gen_prefix,
-            index_resolve,
-            index_seg_prefix,
-            index_segments,
-        )
-
-        gen = index_resolve(spark, table_prefix)
-        parts = [index_gen_prefix(table_prefix, gen)] + [
-            index_seg_prefix(table_prefix, gen, s)
-            for s in index_segments(spark, table_prefix, gen)
-        ]
-        # cross-session seam (round 14 review): attach any part missing
-        # from this session's catalog BEFORE the classify read — the
-        # screen call's own ensure_attached runs too late to save a
-        # stream racing the nightly job's append
-        from ..operators.bucketing import ensure_attached
-        from ..operators.dedup import INDEX_N_BUCKETS, INDEX_SHINGLES_DDL
-
-        for p in parts:
-            ensure_attached(
-                spark, f"{p}_shingles", INDEX_SHINGLES_DDL, "id",
-                INDEX_N_BUCKETS,
+        # ONE snapshot per batch — the classify, screen and append bind
+        # to it — and ONE delta: one shingling + signing pass under the
+        # snapshot's recorded parameters shared by every phase (the
+        # pre-sharing handler re-shingled each batch ~4x).  The screen
+        # refuses a recorded signature other than the handler's
+        # operating point before the within pass reuses the delta's sig.
+        snap = index_open(spark, MINHASH_INDEX, table_prefix)
+        d = snap.delta(batch, id_col=id_col, text_col=text_col)
+        try:
+            if d.rows == 0:
+                return
+            # classify BEFORE any write (see the docstring's three
+            # cases): the batch's INDEXABLE ids against the snapshot's
+            n_in = snap.n_indexed(d.ids)
+            if 0 < n_in < d.rows:
+                raise ValueError(
+                    f"continuous_index_dedup({table_prefix}): batch "
+                    f"{batch_id} has {n_in}/{d.rows} ids already "
+                    "indexed — id REUSE across batches, not a replay; "
+                    "stream ids must be unique (dedupe upstream with "
+                    "exact_dedup_stream). Nothing was written."
+                )
+            cross = incremental_dedup_pairs(
+                d, table_prefix, threshold=threshold, k=k
+            ).select(
+                F.least("old_id", "new_id").alias("doc_a"),
+                F.greatest("old_id", "new_id").alias("doc_b"),
+                "jaccard",
             )
-        existing = _reduce(
-            DataFrame.unionByName,
-            [spark.table(f"{p}_shingles").select("id") for p in parts],
-        )
-        n_in = hs.select("id").join(existing, "id", "left_semi").count()
-        if 0 < n_in < n_indexable:
-            raise ValueError(
-                f"continuous_index_dedup({table_prefix}): batch "
-                f"{batch_id} has {n_in}/{n_indexable} ids already "
-                "indexed — id REUSE across batches, not a replay; "
-                "stream ids must be unique (dedupe upstream with "
-                "exact_dedup_stream). Nothing was written."
-            )
-        replay = n_in == n_indexable  # n_indexable > 0 guaranteed above
-        cross = incremental_dedup_pairs(
-            batch, table_prefix, threshold=threshold, **kw, **share
-        ).select(
-            F.least("old_id", "new_id").alias("doc_a"),
-            F.greatest("old_id", "new_id").alias("doc_b"),
-            "jaccard",
-        )
-        within = minhash_dedup_pairs(
-            batch, threshold=threshold, **kw, **share
-        ).select("doc_a", "doc_b", "jaccard")
-        cross.unionByName(within).write.mode("append").parquet(pairs_dir)
-        if not replay:
-            # check_duplicate_ids=False (round 15, guide §1.2): the
-            # classify semi-join above already proved the batch ALL-NEW
-            # against every part — the append's index-side duplicate
-            # check is the identical join re-run (the ivf handler's
-            # standing subsumption argument); its INTERNAL duplicate
-            # check still runs.  SINGLE-WRITER ASSUMPTION (ADVICE r15):
-            # the classify ran outside the index claim, so an
-            # id-overlapping segment published by a CONCURRENT writer
-            # between classify and append is not re-checked in-claim;
-            # foreachBatch handlers are single-writer per index (the
-            # nightly job converges between batches under its own
-            # claim) — concurrent id-overlapping writers must keep
-            # check_duplicate_ids=True.
-            # hs_rows (round 16, guide §1.2): the indexable-guard count
-            # above already counted the SAME pinned hs frame — the
-            # append's batch_rows job is skipped, identical value.
-            minhash_index_append(
-                batch, table_prefix, **kw, **share, check_duplicate_ids=False,
-                hs_rows=n_indexable,
-            )
+            within = minhash_dedup_pairs(
+                batch, threshold=threshold, **kw, hs_df=d.hs, sig_df=d.sig
+            ).select("doc_a", "doc_b", "jaccard")
+            cross.unionByName(within).write.mode("append").parquet(pairs_dir)
+            if n_in == 0:
+                # check_duplicate_ids=False: the classify already proved
+                # the batch ALL-NEW (the embedding handler's note on the
+                # single-writer assumption applies verbatim); the
+                # delta's internal-duplicate check still runs
+                minhash_index_append(d, table_prefix, k=k, check_duplicate_ids=False)
+        finally:
+            d.release()
 
     return handle

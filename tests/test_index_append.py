@@ -11,13 +11,13 @@ import pyspark.sql.functions as F
 import pytest
 
 from distributed_graph_db_c_spark.operators.bucketing import (
+    index_claim,
     index_drop_all,
     index_gen_prefix,
     index_seg_prefix,
     index_segments,
 )
 from distributed_graph_db_c_spark.operators.dedup import (
-    _index_claim,
     incremental_dedup_pairs,
     minhash_index_append,
     minhash_index_attach,
@@ -47,7 +47,7 @@ def _clean(spark, prefix: str) -> None:
     index_drop_all(spark, prefix, ("_bands", "_shingles"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 def test_append_matches_union_build_and_is_associative(spark):
@@ -144,22 +144,22 @@ def test_append_refusals_release_claim_when_untouched(spark):
         # (a) no published generation: refuse, release
         with pytest.raises(FileNotFoundError, match="no published generation"):
             minhash_index_append(delta, "apx_ref")
-        assert not fs.exists(jpath(_index_claim(warehouse, "apx_ref")))
+        assert not fs.exists(jpath(index_claim(warehouse, "apx_ref")))
         minhash_index_build(base, "apx_ref")  # claim was released: build works
         # (b) re-ingested id: refuse, release, index intact
         with pytest.raises(ValueError, match="already indexed"):
             minhash_index_append(base.limit(3), "apx_ref")
-        assert not fs.exists(jpath(_index_claim(warehouse, "apx_ref")))
+        assert not fs.exists(jpath(index_claim(warehouse, "apx_ref")))
         assert index_segments(spark, "apx_ref", 1) == []
         # (c) internally duplicated delta: refuse
         dup = delta.unionByName(delta.limit(1))
         with pytest.raises(ValueError, match="internally duplicated"):
             minhash_index_append(dup, "apx_ref")
         # (d) standing claim (a racing build/append): loud refusal
-        claim_marker(fs, jpath, _index_claim(warehouse, "apx_ref"), "test")
+        claim_marker(fs, jpath, index_claim(warehouse, "apx_ref"), "test")
         with pytest.raises(ConcurrentCommitError):
             minhash_index_append(delta, "apx_ref")
-        fs.delete(jpath(_index_claim(warehouse, "apx_ref")), False)
+        fs.delete(jpath(index_claim(warehouse, "apx_ref")), False)
         # healthy append still works after all refusals
         assert minhash_index_append(delta, "apx_ref")["segment"] == 1
     finally:

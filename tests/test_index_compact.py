@@ -46,13 +46,13 @@ def _mh_pairs(df) -> dict:
 
 
 def _mh_clean(spark, prefix: str) -> None:
-    from distributed_graph_db_c_spark.operators.dedup import _index_claim
+    from distributed_graph_db_c_spark.operators.bucketing import index_claim
     from distributed_graph_db_c_spark.sinks import _hadoop_fs
 
     index_drop_all(spark, prefix, ("_bands", "_shingles"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 def test_minhash_compact_exact_resets_trigger_and_keeps_pins(spark):
@@ -197,13 +197,13 @@ def _vecs(spark, rows):
 
 
 def _lsh_clean(spark, prefix: str) -> None:
-    from distributed_graph_db_c_spark.operators.similarity import _lsh_index_claim
+    from distributed_graph_db_c_spark.operators.bucketing import index_claim
     from distributed_graph_db_c_spark.sinks import _hadoop_fs
 
     index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 def test_lsh_compact_exact_and_drift_arm_survives(spark):

@@ -21,12 +21,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from distributed_graph_db_c_spark.operators.bucketing import (
+    index_claim,
     index_drop_all,
     index_generations,
     index_segments,
 )
 from distributed_graph_db_c_spark.operators.dedup import (
-    _index_claim,
     incremental_dedup_pairs,
     minhash_index_build,
     minhash_index_append,
@@ -74,7 +74,7 @@ def _clean(spark, prefix: str) -> None:
     index_drop_all(spark, prefix, ("_bands", "_shingles"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 # ---- the op alphabet -------------------------------------------------------

@@ -12,11 +12,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from distributed_graph_db_c_spark.operators.bucketing import (
+    index_claim,
     index_drop_all,
     index_segments,
 )
 from distributed_graph_db_c_spark.operators.similarity import (
-    _lsh_index_claim,
     decontaminate_incremental,
     lsh_index_append,
     lsh_index_attach,
@@ -77,7 +77,7 @@ def _clean(spark, prefix):
     index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 def test_lsh_append_matches_bruteforce_and_segment_pin(spark):
@@ -161,11 +161,11 @@ def test_lsh_append_refusals_and_retrain_ledger(spark):
     try:
         with pytest.raises(FileNotFoundError, match="no published generation"):
             lsh_index_append(delta, "lap_ref")
-        assert not fs.exists(jpath(_lsh_index_claim(warehouse, "lap_ref")))
+        assert not fs.exists(jpath(index_claim(warehouse, "lap_ref")))
         lsh_index_build(base, "lap_ref", threshold=THRESHOLD, dim=DIM, multiprobe=4)
         with pytest.raises(ValueError, match="already indexed"):
             lsh_index_append(base.limit(2), "lap_ref")
-        assert not fs.exists(jpath(_lsh_index_claim(warehouse, "lap_ref")))
+        assert not fs.exists(jpath(index_claim(warehouse, "lap_ref")))
         assert index_segments(spark, "lap_ref", 1) == []
         with pytest.raises(ValueError, match="internally duplicated"):
             lsh_index_append(delta.unionByName(delta.limit(1)), "lap_ref")
@@ -176,12 +176,12 @@ def test_lsh_append_refusals_and_retrain_ledger(spark):
         )
         with pytest.raises(ValueError, match="width"):
             lsh_index_append(bad, "lap_ref")
-        assert not fs.exists(jpath(_lsh_index_claim(warehouse, "lap_ref")))
+        assert not fs.exists(jpath(index_claim(warehouse, "lap_ref")))
         assert index_segments(spark, "lap_ref", 1) == []
-        claim_marker(fs, jpath, _lsh_index_claim(warehouse, "lap_ref"), "t")
+        claim_marker(fs, jpath, index_claim(warehouse, "lap_ref"), "t")
         with pytest.raises(ConcurrentCommitError):
             lsh_index_append(delta, "lap_ref")
-        fs.delete(jpath(_lsh_index_claim(warehouse, "lap_ref")), False)
+        fs.delete(jpath(index_claim(warehouse, "lap_ref")), False)
 
         # ledger: base 30, delta 30 -> frac 1.0 against the recorded basis
         audit = lsh_index_append(delta, "lap_ref")
@@ -250,7 +250,6 @@ def test_lsh_attach_recovers_segments_after_restart(spark):
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
         parts = [index_gen_prefix("lap_att", gen), index_seg_prefix("lap_att", gen, 1)]
         tables = [f"{p}{s}" for p in parts for s in ("_buckets", "_vectors")]
-        tables.append(f"{index_gen_prefix('lap_att', gen)}_meta")
         for t in tables:
             shutil.copytree(f"{warehouse}/{t}", f"{warehouse}/_keep_{t}")
             spark.sql(f"DROP TABLE {t}")

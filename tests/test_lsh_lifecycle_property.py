@@ -22,12 +22,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from distributed_graph_db_c_spark.operators.bucketing import (
+    index_claim,
     index_drop_all,
     index_generations,
     index_segments,
 )
 from distributed_graph_db_c_spark.operators.similarity import (
-    _lsh_index_claim,
     decontaminate_incremental,
     lsh_index_append,
     lsh_index_build,
@@ -59,7 +59,7 @@ def _clean(spark, prefix: str) -> None:
     index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     fs, jpath = _hadoop_fs(spark, warehouse)
-    fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+    fs.delete(jpath(index_claim(warehouse, prefix)), False)
 
 
 def _expected(indexed: set[int]) -> set[tuple[int, int]]:

@@ -798,9 +798,11 @@ def test_decontaminate_incremental_refuses_mid_build(spark):
     dead mid-rewrite builder really can leave a mismatched snapshot."""
     import uuid
 
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
+        index_drop_all,
+    )
     from distributed_graph_db_c_spark.operators.similarity import (
-        _lsh_index_claim,
         decontaminate_incremental,
         lsh_index_build,
     )
@@ -817,7 +819,7 @@ def test_decontaminate_incremental_refuses_mid_build(spark):
     tr = corpus.filter(F.col("vec_id") < _PLANT_ID_OFFSET)
     prefix = f"deconclaim_{uuid.uuid4().hex[:8]}"
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    claim = _lsh_index_claim(warehouse, prefix)
+    claim = index_claim(warehouse, prefix)
     try:
         lsh_index_build(
             tr, prefix, threshold=_GRADE_THRESHOLD, dim=64,
@@ -837,7 +839,7 @@ def test_decontaminate_incremental_refuses_mid_build(spark):
         # legacy/never-built prefix under a claim: refuse loudly (the
         # generation-0 path raises BEFORE touching any table)
         legacy_prefix = f"deconlegacy_{uuid.uuid4().hex[:8]}"
-        legacy_claim = _lsh_index_claim(warehouse, legacy_prefix)
+        legacy_claim = index_claim(warehouse, legacy_prefix)
         with open(legacy_claim.replace("file:", ""), "w") as f:
             f.write("wedged-builder")
         try:
@@ -901,7 +903,7 @@ def test_lsh_index_attach_recovers_catalog_and_result(spark):
         gen = index_resolve(spark, prefix)
         gp = index_gen_prefix(prefix, gen)
         warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in (f"{gp}_buckets", f"{gp}_vectors", f"{gp}_meta"):
+        for t in (f"{gp}_buckets", f"{gp}_vectors"):
             shutil.copytree(f"{warehouse}/{t}", f"{warehouse}/_keep_{t}")
             spark.sql(f"DROP TABLE {t}")
             shutil.move(f"{warehouse}/_keep_{t}", f"{warehouse}/{t}")

@@ -15,8 +15,6 @@ whole lifecycle under the new layout:
   generation, and a reader pinned to a vacuumed one fails loudly;
 - ivf_index_attach (the lsh_index_attach twin for plain-path sidecars)
   validates + describes a restarted index;
-- the legacy FLAT layout still reads/appends, and a retrain migrates it
-  into generations;
 - ADVICE r10: appending to an index whose meta records n_base == 0
   refuses in the pre-mutation section (claim released, index untouched).
 """
@@ -202,63 +200,6 @@ def test_ivf_index_attach_recovers_descriptor_and_result(spark):
         cleanup(s)
 
 
-def test_ivf_legacy_flat_layout_reads_appends_and_migrates(spark):
-    """Pre-generation indexes (content at ``path`` itself) stay
-    serviceable: queries resolve the flat layout, appends mutate it in
-    place, readers still refuse under a retrain claim (the flat swap is
-    in-place, so the old refusal is the only safe answer there), and a
-    retrain-swap MIGRATES the index into generations — publishes
-    g=00000001 and retires the flat sidecars."""
-    from distributed_graph_db_c_spark.operators.similarity import (
-        _ivf_write_content,
-        ivf_append,
-        ivf_query_persisted,
-        ivf_resolve,
-        ivf_retrain_swap,
-    )
-    from distributed_graph_db_c_spark.sinks import ConcurrentCommitError, _commit_claim
-    from distributed_graph_db_c_spark.streaming.sources import cleanup, scratch_dir
-
-    emb = _emb(spark)
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    delta = emb.filter(F.col("vec_id") % 5 == 0)
-    qvec = [1.0] + [0.0] * 63
-    s = scratch_dir("ivfflat")
-    try:
-        # hand-build the legacy layout: content directly at the root
-        _ivf_write_content(base, f"{s}/idx", 24, "vec_id", "embedding")
-        assert ivf_resolve(spark, f"{s}/idx") == f"{s}/idx"
-        assert (
-            ivf_query_persisted(
-                spark, f"{s}/idx", query_vec=qvec, top_k=3, nprobe=24
-            ).count()
-            == 3
-        )
-        ivf_append(spark, f"{s}/idx", delta)
-        assert os.path.exists(f"{s}/idx/lists")  # still flat
-
-        # flat readers refuse under a retrain claim (in-place semantics)
-        rt = _commit_claim(f"{s}/idx")
-        with open(rt, "w") as f:
-            f.write("wedged-retrainer")
-        with pytest.raises(ConcurrentCommitError):
-            ivf_query_persisted(spark, f"{s}/idx", query_vec=qvec)
-        os.remove(rt)
-
-        # retrain migrates: g=00000001 published, flat sidecars retired
-        gen = ivf_retrain_swap(spark, f"{s}/idx", emb, n_cells=24)
-        assert gen == 1
-        assert os.path.isdir(f"{s}/idx/g=00000001")
-        for side in ("lists", "ids", "centroids", "meta", "append_log"):
-            assert not os.path.exists(f"{s}/idx/{side}"), side
-        got = ivf_query_persisted(
-            spark, f"{s}/idx", query_vec=qvec, top_k=3, nprobe=24
-        )
-        assert got.count() == 3
-    finally:
-        cleanup(s)
-
-
 def test_ivf_append_refuses_empty_base(spark):
     """ADVICE r10: meta.n_base == 0 must refuse in the PRE-MUTATION
     section — before this fix the ZeroDivisionError fired after the
@@ -416,46 +357,6 @@ def test_ivf_publish_race_fails_loudly_and_discards_staging(spark, monkeypatch):
         assert gen == 3
         assert sim._ivf_generations(spark, path) == [1, 2, 3]
         assert sim.ivf_resolve(spark, path).endswith("g=00000003")
-    finally:
-        cleanup(s)
-
-
-def test_ivf_index_attach_describes_legacy_flat_layout(spark):
-    """Attach on a pre-generation index reports generation 0 (the
-    legacy marker) with the same validated descriptor fields, so a
-    restarted scheduler can tell the layouts apart and plan the
-    migrating retrain."""
-    from distributed_graph_db_c_spark.operators.similarity import (
-        _ivf_write_content,
-        ivf_index_attach,
-    )
-    from distributed_graph_db_c_spark.streaming.sources import cleanup, scratch_dir
-
-    emb = _emb(spark)
-    base = emb.filter(F.col("vec_id") % 5 != 0)
-    s = scratch_dir("ivfattflat")
-    try:
-        _ivf_write_content(base, f"{s}/idx", 24, "vec_id", "embedding")
-        desc = ivf_index_attach(spark, f"{s}/idx")
-        assert desc["generation"] == 0
-        assert desc["n_cells"] == 24 and desc["dim"] == 64
-        assert desc["n_base"] == desc["total_rows"] == base.count()
-        assert desc["retrain_due"] is False and desc["appended_frac"] == 0.0
-        # ADVICE r11 (closed r12): the descriptor's generation field
-        # ROUND-TRIPS — 0 is the explicit flat-layout pin, resolving to
-        # the path itself, and the query path accepts it
-        from distributed_graph_db_c_spark.operators.similarity import (
-            ivf_query_persisted,
-            ivf_resolve,
-        )
-
-        assert ivf_resolve(spark, f"{s}/idx", generation=0) == f"{s}/idx"
-        q = base.head()["embedding"]
-        pinned = ivf_query_persisted(
-            spark, f"{s}/idx", query_vec=list(q), top_k=3,
-            generation=desc["generation"],
-        ).collect()
-        assert len(pinned) == 3
     finally:
         cleanup(s)
 

@@ -221,9 +221,11 @@ def test_continuous_stream_rides_mid_stream_compaction(spark):
     to the batch operator over the whole corpus."""
     import pyspark.sql.functions as F
 
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
+        index_drop_all,
+    )
     from distributed_graph_db_c_spark.operators.dedup import (
-        _index_claim,
         minhash_dedup_pairs,
         minhash_index_compact,
         minhash_index_status,
@@ -281,7 +283,7 @@ def test_continuous_stream_rides_mid_stream_compaction(spark):
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 
@@ -299,9 +301,11 @@ def test_continuous_embedding_dedup_equals_batch_and_handles_replay(spark):
     import pyspark.sql.functions as F
     import pytest
 
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
+        index_drop_all,
+    )
     from distributed_graph_db_c_spark.operators.similarity import (
-        _lsh_index_claim,
         cosine_pairs,
         decontaminate_incremental,
         lsh_index_status,
@@ -376,7 +380,7 @@ def test_continuous_embedding_dedup_equals_batch_and_handles_replay(spark):
         index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 

@@ -85,12 +85,13 @@ def test_continuous_embedding_stream_rides_mid_stream_retrain(spark):
     corpus.  The retrain twin of
     test_continuous_stream_rides_mid_stream_compaction."""
     from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
         index_drop_all,
-        index_gen_prefix,
+        index_open,
     )
     from distributed_graph_db_c_spark.operators.similarity import (
+        LSH_INDEX,
         N_PLANES,
-        _lsh_index_claim,
         cosine_pairs,
         lsh_index_build,
         lsh_index_status,
@@ -145,7 +146,7 @@ def test_continuous_embedding_stream_rides_mid_stream_retrain(spark):
         # the planes were genuinely RE-SIZED: the recorded sizing basis
         # grew from one third of the corpus to two
         assert st["basis_rows"] == grown.count() > batches[0].count()
-        meta = spark.table(f"{index_gen_prefix(prefix, 2)}_meta").head()
+        meta = index_open(spark, LSH_INDEX, prefix, generation=2).params
         assert int(meta["n_rows"]) == st["basis_rows"]
         # phase 2: the stream resumes on the SAME checkpoint and must
         # ride the retrained generation
@@ -166,7 +167,7 @@ def test_continuous_embedding_stream_rides_mid_stream_retrain(spark):
         index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 
@@ -204,8 +205,8 @@ def test_bucket_spec_recorded_and_recovered_cross_session(spark):
         if os.path.exists(loc):
             shutil.rmtree(loc)
         shutil.move(staged, loc)
-        # the caller supplies the (wrong) default 32 — the sidecar wins
-        ensure_attached(spark, table, "id bigint, grp bigint", "id", 32)
+        # the caller supplies no spec — the recorded one is the only one
+        ensure_attached(spark, table, "id bigint, grp bigint")
         got = spark.catalog.getTable(table)
         assert got.tableType == "EXTERNAL"
         assert spark.table(table).count() == expected
@@ -354,11 +355,11 @@ def test_continuous_minhash_empty_and_unindexable_batches_are_noops(spark):
     may such a batch bootstrap an empty generation whose zero-row basis
     poisons the retrain ledger."""
     from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
         index_drop_all,
         index_generations,
     )
     from distributed_graph_db_c_spark.operators.dedup import (
-        _index_claim,
         minhash_index_status,
     )
     from distributed_graph_db_c_spark.sinks import _hadoop_fs
@@ -395,17 +396,17 @@ def test_continuous_minhash_empty_and_unindexable_batches_are_noops(spark):
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 
 def test_continuous_embedding_empty_batches_are_noops(spark):
     from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
         index_drop_all,
         index_generations,
     )
     from distributed_graph_db_c_spark.operators.similarity import (
-        _lsh_index_claim,
         lsh_index_status,
     )
     from distributed_graph_db_c_spark.sinks import _hadoop_fs
@@ -435,7 +436,7 @@ def test_continuous_embedding_empty_batches_are_noops(spark):
         index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 
@@ -635,11 +636,11 @@ def test_continuous_stream_classify_survives_cross_session_append(spark):
     simulated by destroying the catalog entries (files preserved)
     between an append and the next micro-batch."""
     from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
         index_drop_all,
         index_seg_prefix,
     )
     from distributed_graph_db_c_spark.operators.dedup import (
-        _index_claim,
         minhash_dedup_pairs,
         minhash_index_status,
     )
@@ -682,7 +683,7 @@ def test_continuous_stream_classify_survives_cross_session_append(spark):
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 

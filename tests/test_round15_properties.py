@@ -5,8 +5,7 @@ root and pinned here:
    used Java ``DataOutputStream.writeUTF``, which caps payloads at
    64 KiB of modified UTF-8 behind a 2-byte length prefix and makes
    the file unreadable to external JSON tools.  It now writes RAW
-   UTF-8 JSON; ``read_json_sidecar`` reads the full stream and still
-   accepts the legacy framing for sidecars already on disk.
+   UTF-8 JSON and ``read_json_sidecar`` reads the full stream.
 
 2. Republish absence window (ADVICE r14 low #2): on the republish
    path (destination occupied) the writer deleted the old sidecar
@@ -71,32 +70,10 @@ def test_sidecar_bytes_are_raw_utf8_json(spark):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_sidecar_reads_legacy_writeutf_framing(spark):
-    """Sidecars written before round 15 carry writeUTF framing (2-byte
-    big-endian length + modified UTF-8); the reader must still parse
-    them rather than bricking every pre-r15 index directory."""
-    from distributed_graph_db_c_spark.operators.bucketing import (
-        BUCKET_SPEC_FILE,
-        read_json_sidecar,
-    )
-
-    loc = "/tmp/r15_legacy_sidecar"
-    shutil.rmtree(loc, ignore_errors=True)
-    os.makedirs(loc)
-    try:
-        payload = {"keys": ["doc_id"], "n_buckets": 7, "sorted": False}
-        body = json.dumps(payload).encode("utf-8")
-        with open(os.path.join(loc, BUCKET_SPEC_FILE), "wb") as fh:
-            fh.write(len(body).to_bytes(2, "big") + body)
-        assert read_json_sidecar(spark, loc, BUCKET_SPEC_FILE) == payload
-    finally:
-        shutil.rmtree(loc, ignore_errors=True)
-
-
 def test_sidecar_torn_file_still_refuses(spark):
-    """The legacy-framing fallback must not weaken the torn-file
-    refusal: garbage bytes that parse under neither format raise the
-    clear contract error, never return None or a guess."""
+    """Bytes that are not raw UTF-8 JSON — garbage, or JSON behind a
+    2-byte length prefix (the retired Java framing) — raise the clear
+    contract error, never return None or a guess."""
     from distributed_graph_db_c_spark.operators.bucketing import (
         BUCKET_SPEC_FILE,
         read_json_sidecar,
@@ -105,11 +82,16 @@ def test_sidecar_torn_file_still_refuses(spark):
     loc = "/tmp/r15_torn_sidecar"
     shutil.rmtree(loc, ignore_errors=True)
     os.makedirs(loc)
+    body = json.dumps({"keys": ["doc_id"], "n_buckets": 7}).encode("utf-8")
     try:
-        with open(os.path.join(loc, BUCKET_SPEC_FILE), "wb") as fh:
-            fh.write(b"\x00\xff not json and not a valid frame")
-        with pytest.raises(ValueError, match="cannot be read/parsed"):
-            read_json_sidecar(spark, loc, BUCKET_SPEC_FILE)
+        for data in (
+            b"\x00\xff not json and not a valid frame",
+            len(body).to_bytes(2, "big") + body,
+        ):
+            with open(os.path.join(loc, BUCKET_SPEC_FILE), "wb") as fh:
+                fh.write(data)
+            with pytest.raises(ValueError, match="cannot be read/parsed"):
+                read_json_sidecar(spark, loc, BUCKET_SPEC_FILE)
     finally:
         shutil.rmtree(loc, ignore_errors=True)
 
@@ -275,10 +257,12 @@ def test_lsh_post_retrain_batch_crash_redelivery_keeps_pairs_exact(spark):
     at-least-once sink contract; distinct() collapses them) and
     appending NO second segment — so the accumulated distinct pair set
     still equals exact all-pairs cosine."""
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
+        index_drop_all,
+    )
     from distributed_graph_db_c_spark.operators.similarity import (
         N_PLANES,
-        _lsh_index_claim,
         cosine_pairs,
         lsh_index_build,
         lsh_index_status,
@@ -329,7 +313,7 @@ def test_lsh_post_retrain_batch_crash_redelivery_keeps_pairs_exact(spark):
         index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 

@@ -1,7 +1,8 @@
-"""Round-16 optimization equivalence pins: the shared-bucketing-pass
-and precounted-validation params added to the LSH/minhash/IVF append
-family (guide §1.2/§4) must be RESULT-INVARIANT — same pairs, same
-audits, same refusals — with and without the sharing."""
+"""Round-16 optimization equivalence pins: the shared bucketing pass
+and validation counts of the LSH/minhash/IVF append family (guide
+§1.2/§4) — for the two warehouse indexes now carried by a snapshot's
+delta — must be RESULT-INVARIANT: same pairs, same audits, same
+refusals, with and without the sharing."""
 
 from __future__ import annotations
 
@@ -10,10 +11,14 @@ import uuid
 import pyspark.sql.functions as F
 import pytest
 
-from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+from distributed_graph_db_c_spark.operators.bucketing import (
+    index_claim,
+    index_drop_all,
+    index_open,
+)
 from distributed_graph_db_c_spark.operators.similarity import (
+    LSH_INDEX,
     N_PLANES,
-    _lsh_index_claim,
     cosine_lsh_pairs,
     decontaminate_incremental,
     lsh_index_append,
@@ -52,6 +57,9 @@ def test_cosine_lsh_pairs_buckets_df_is_result_invariant(spark, emb):
 
 
 def test_lsh_append_precounted_and_buckets_df_invariant(spark, emb):
+    """The round-16 sharing — one bucketing pass and one validation
+    aggregate per batch — rides on a snapshot's delta: appending and
+    screening through deltas must equal the plain-frame path."""
     halves = [
         emb.filter(F.pmod("vec_id", F.lit(2)) == i).localCheckpoint(eager=True)
         for i in range(2)
@@ -65,73 +73,68 @@ def test_lsh_append_precounted_and_buckets_df_invariant(spark, emb):
                 halves[0], prefix, threshold=0.45, dim=64, multiprobe=N_PLANES
             )
             if use_sharing:
-                meta = spark.table(f"{prefix}__g00000001_meta").head()
-                shared = with_lsh_buckets(
-                    halves[1], 64,
-                    n_planes=int(meta["n_planes"]),
-                    n_tables=int(meta["n_tables"]),
-                ).localCheckpoint(eager=True)
-                row = halves[1].agg(
-                    F.count(F.lit(1)),
-                    F.count_distinct("vec_id"),
-                    F.max(F.col("vec_id").isNull().cast("int")),
-                    F.sum(F.when(F.size("embedding") != 64, 1).otherwise(0)),
-                ).head()
-                audit = lsh_index_append(
-                    halves[1], prefix, buckets_df=shared,
-                    precounted=(
-                        int(row[0]), int(row[1]) + int(row[2] or 0),
-                        int(row[3] or 0), 64,
-                    ),
-                )
+                d = index_open(spark, LSH_INDEX, prefix).delta(halves[1])
+                d.counts, d.buckets  # the handler's per-batch passes, made once
+                audit = lsh_index_append(d, prefix)
+                d.release()
+                ev = index_open(spark, LSH_INDEX, prefix).delta(eva)
+                screens.append(_rows(decontaminate_incremental(ev, prefix)))
+                ev.release()
             else:
                 audit = lsh_index_append(halves[1], prefix)
+                screens.append(_rows(decontaminate_incremental(eva, prefix)))
             audits.append(audit)
-            screens.append(_rows(decontaminate_incremental(eva, prefix)))
         finally:
             index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
             wh = spark.conf.get("spark.sql.warehouse.dir")
             fs, jpath = _hadoop_fs(spark, wh)
-            fs.delete(jpath(_lsh_index_claim(wh, prefix)), False)
+            fs.delete(jpath(index_claim(wh, prefix)), False)
     assert audits[0] == audits[1]
     assert screens[0] == screens[1]
 
 
-def test_lsh_append_precounted_dim_mismatch_falls_back(spark, emb):
-    """A precounted tuple measured against the WRONG dim must be ignored
-    (the append re-aggregates), so a bogus width count can never skip
-    the width refusal."""
+def test_lsh_append_refuses_delta_of_superseded_dim(spark, emb):
+    """A delta validated and bucketed under generation 1's recorded dim
+    must not land once a rebuild at another dim is published: the append
+    refuses (naming both generations), publishes no segment and
+    releases the claim."""
+    from distributed_graph_db_c_spark.operators.bucketing import index_segments
+    from distributed_graph_db_c_spark.sinks import ConcurrentCommitError
+
     halves = [
         emb.filter(F.pmod("vec_id", F.lit(2)) == i).localCheckpoint(eager=True)
         for i in range(2)
     ]
     prefix = f"r16t_{uuid.uuid4().hex[:8]}"
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    fs, jpath = _hadoop_fs(spark, wh)
     try:
         lsh_index_build(
             halves[0], prefix, threshold=0.45, dim=64, multiprobe=N_PLANES
         )
-        # dim_counted=32 != recorded 64 -> fall back to own aggregation,
-        # which still passes (vectors are width 64); the bogus n_bad=999
-        # in the tuple must NOT trigger a refusal
-        audit = lsh_index_append(
-            halves[1], prefix,
-            precounted=(halves[1].count(), halves[1].count(), 999, 32),
-        )
-        assert audit["segment"] == 1
+        d = index_open(spark, LSH_INDEX, prefix).delta(halves[1])
+        narrow = halves[0].withColumn("embedding", F.slice("embedding", 1, 32))
+        lsh_index_build(narrow, prefix, threshold=0.45, dim=32, multiprobe=N_PLANES)
+        with pytest.raises(ConcurrentCommitError, match="generation 1.*generation 2"):
+            lsh_index_append(d, prefix)
+        d.release()
+        assert index_segments(spark, prefix, 1) == []
+        assert index_segments(spark, prefix, 2) == []
+        assert not fs.exists(jpath(index_claim(wh, prefix)))
     finally:
         index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        fs, jpath = _hadoop_fs(spark, wh)
-        fs.delete(jpath(_lsh_index_claim(wh, prefix)), False)
+        fs.delete(jpath(index_claim(wh, prefix)), False)
 
 
 def test_minhash_append_hs_rows_invariant(spark):
+    """Appending through a snapshot's delta whose indexable count the
+    caller already took (the handler's empty-batch guard) must equal the
+    plain-frame append: the ledger reuses the delta's own count."""
     from distributed_graph_db_c_spark.operators.dedup import (
-        _index_claim,
+        MINHASH_INDEX,
         minhash_index_append,
         minhash_index_build,
         minhash_index_status,
-        shingle_hash_sets,
     )
 
     docs = load_table(spark, SF_DIR, "documents").localCheckpoint(eager=True)
@@ -141,18 +144,18 @@ def test_minhash_append_hs_rows_invariant(spark):
         prefix = f"r16m_{uuid.uuid4().hex[:8]}"
         try:
             minhash_index_build(halves[0], prefix)
-            hs = shingle_hash_sets(halves[1], 3, "doc_id", "text").localCheckpoint(
-                eager=True
-            )
-            kw = dict(hs_df=hs)
             if pass_rows:
-                kw["hs_rows"] = hs.count()
-            audits.append(minhash_index_append(halves[1], prefix, **kw))
+                d = index_open(spark, MINHASH_INDEX, prefix).delta(halves[1])
+                assert d.rows > 0
+                audits.append(minhash_index_append(d, prefix))
+                d.release()
+            else:
+                audits.append(minhash_index_append(halves[1], prefix))
             statuses.append(minhash_index_status(spark, prefix))
         finally:
             index_drop_all(spark, prefix, ("_bands", "_shingles"))
             wh = spark.conf.get("spark.sql.warehouse.dir")
             fs, jpath = _hadoop_fs(spark, wh)
-            fs.delete(jpath(_index_claim(wh, prefix)), False)
+            fs.delete(jpath(index_claim(wh, prefix)), False)
     assert audits[0] == audits[1]
     assert statuses[0] == statuses[1]

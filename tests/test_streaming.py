@@ -232,9 +232,11 @@ def test_continuous_index_dedup_equals_batch_and_converges_with_nightly(spark):
     not change the distinct set; and a NIGHTLY batch must be able to
     screen against the stream-built index directly (one index, two
     cadences)."""
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import (
+        index_claim,
+        index_drop_all,
+    )
     from distributed_graph_db_c_spark.operators.dedup import (
-        _index_claim,
         incremental_dedup_pairs,
         minhash_dedup_pairs,
         minhash_index_status,
@@ -311,7 +313,7 @@ def test_continuous_index_dedup_equals_batch_and_converges_with_nightly(spark):
         index_drop_all(spark, prefix, ("_bands", "_shingles"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 

@@ -54,10 +54,9 @@ SF1 = os.path.join(
 
 
 def run_stream(spark, sf_dir: str, maintained: bool) -> dict:
-    from distributed_graph_db_c_spark.operators.bucketing import index_drop_all
+    from distributed_graph_db_c_spark.operators.bucketing import index_claim, index_drop_all
     from distributed_graph_db_c_spark.operators.similarity import (
         N_PLANES,
-        _lsh_index_claim,
         lsh_index_build,
         lsh_index_status,
     )
@@ -99,10 +98,10 @@ def run_stream(spark, sf_dir: str, maintained: bool) -> dict:
         n_pairs = spark.read.parquet(f"{scratch}/pairs").distinct().count()
         return {"total_sec": total, "phases": phases, "distinct_pairs": n_pairs}
     finally:
-        index_drop_all(spark, prefix, ("_buckets", "_vectors", "_meta"))
+        index_drop_all(spark, prefix, ("_buckets", "_vectors"))
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
         fs, jpath = _hadoop_fs(spark, warehouse)
-        fs.delete(jpath(_lsh_index_claim(warehouse, prefix)), False)
+        fs.delete(jpath(index_claim(warehouse, prefix)), False)
         cleanup(scratch)
 
 
